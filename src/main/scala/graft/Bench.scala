@@ -228,12 +228,9 @@ object Bench {
     // regime via SPARK_GRAFT_BENCH_NOCBO=1.
     val cboRegime = !sys.env.get("SPARK_GRAFT_BENCH_NOCBO").exists(_ == "1")
     if (cboRegime) {
-      val mapping = graft.tools.CboAnchors.ensureTables(spark, sfDir)
-      graft.tools.CboAnchors.publishAll(spark, mapping)
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
+      val n = graft.tools.CboAnchors.operatingRegime(spark, sfDir)
       System.err.println("[bench] cbo regime ON: statistics published " +
-        s"on ${mapping.size} anchor catalog tables")
+        s"on $n anchor catalog tables")
     }
 
     // Host-speed probe FIRST (before any query warms caches), so every

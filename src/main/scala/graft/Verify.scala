@@ -23,8 +23,15 @@ object Verify {
     SparkEntry.oracleSql.filter(kv => keep(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
 
+  /** Usage: `Verify <sfDir> <outDir> [query …]`; named queries restrict
+    * both the dump and oracle_sql.json to that subset. */
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    val sfDir = args(0)
+    val outDir = args(1)
+    val only = args.drop(2).toSet
+    only.filterNot(SparkEntry.queries.contains)
+      .foreach(q => System.err.println(s"[verify] unknown query $q"))
+    def keep(name: String) = only.isEmpty || only(name)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Sessions.local(cpus, "graft-verify")
     // Same standing optimizer posture as Bench (round-16): anchor-table
@@ -33,22 +40,20 @@ object Verify {
     // the operating regime, not beside it. SPARK_GRAFT_VERIFY_NOCBO=1
     // restores the stats-blind control.
     if (!sys.env.get("SPARK_GRAFT_VERIFY_NOCBO").exists(_ == "1")) {
-      val mapping = graft.tools.CboAnchors.ensureTables(spark, sfDir)
-      graft.tools.CboAnchors.publishAll(spark, mapping)
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
+      val n = graft.tools.CboAnchors.operatingRegime(spark, sfDir)
       System.err.println("[verify] cbo regime ON: statistics published " +
-        s"on ${mapping.size} anchor catalog tables")
+        s"on $n anchor catalog tables")
     }
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+      if (keep(name))
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        }
     }
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson())
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(keep))
     spark.stop()
   }
 }

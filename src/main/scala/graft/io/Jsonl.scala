@@ -25,10 +25,6 @@ object Jsonl {
                 schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
 
-  /** Schema-inferring reader (costs an extra pass; dev/ad-hoc use). */
-  def readJsonlInfer(spark: SparkSession, path: String): DataFrame =
-    spark.read.json(path)
-
   /** Permissive reader: malformed lines land in `_corrupt_record`
     * instead of failing the job — quarantine them with
     * `filter(col("_corrupt_record").isNotNull)`.

@@ -297,9 +297,9 @@ object Dedup {
       ColumnBridge.expression(c), numHashes))
   }
 
-  private[llm] def portableSigTable(df: DataFrame, idCol: String,
-                                    textCol: String, k: Int,
-                                    numHashes: Int): DataFrame = {
+  private def portableSigTable(df: DataFrame, idCol: String,
+                               textCol: String, k: Int,
+                               numHashes: Int): DataFrame = {
     def permSig(c: Column): Column = Dedup.permSig(c, numHashes)
     parallelizeCompute(df, idCol).select(
       col(idCol).as("doc_id"),
@@ -320,8 +320,8 @@ object Dedup {
     * Scala-side instead of an interpreted `aggregate` HOF (identical
     * arithmetic, stays codegen'd).
     */
-  private[llm] def portableBucketOfBand(numHashes: Int,
-                                        bands: Int): Int => Column = {
+  private def portableBucketOfBand(numHashes: Int,
+                                   bands: Int): Int => Column = {
     val rowsPerBand = numHashes / bands
     (b: Int) =>
       (0 until rowsPerBand).foldLeft(lit((b + 1).toLong)) { (acc, j) =>
@@ -675,8 +675,8 @@ object Dedup {
     * (round-18): a map-side-combined count over the narrow key yields
     * the (tiny, storm-only) hot-bucket list, and an anti-join drops its
     * rows — vs the previous `count() over (band, bucket)` window, which
-    * SORTS every bucket partition at corpus scale. ScaleProbe
-    * `maxbucket_guard` ×1/×5/×20: the anti-join never loses (0.86 vs
+    * SORTS every bucket partition at corpus scale. Measured over the
+    * corpus replicated ×1/×5/×20: the anti-join never loses (0.86 vs
     * 1.06, 0.50 vs 0.60, 0.86 vs 0.87 s) and wins asymptotically (no
     * data-scale sort). Kept-row set is identical by construction.
     */
@@ -698,8 +698,8 @@ object Dedup {
     // self-join. WINDOW shape on purpose (round-18 A/B, VERDICT item
     // settled): the counter+anti-join alternative references the banded
     // subtree twice and adds an agg+join stage pair — measured +1.2 s on
-    // a funnel-stage (tiny, checkpointed) input and a wash at ScaleProbe
-    // ×20 (0.86 vs 0.87 s), while the window's per-(band,bucket) sort is
+    // a funnel-stage (tiny, checkpointed) input and a wash on the
+    // corpus replicated ×20 (0.86 vs 0.87 s), while the window's per-(band,bucket) sort is
     // bounded by maxBucket at any scale once storms are the only big
     // buckets. Numbers in OPTIMIZATION_r18.md.
     val bucketW = Window.partitionBy("band", "bucket")
@@ -1498,17 +1498,4 @@ object Dedup {
       .select("doc_id", "span_start", "span_end")
     Contamination.exciseSpans(df, idCol, textCol, merged)
   }
-}
-
-/** Probe-only bridge to [[Dedup]]'s private signature table (round-17
-  * measurement harness; not part of any query path).
-  */
-object DedupProbeBridge {
-  def sigTable(df: org.apache.spark.sql.DataFrame, idCol: String,
-               textCol: String, k: Int, numHashes: Int)
-      : org.apache.spark.sql.DataFrame =
-    Dedup.portableSigTable(df, idCol, textCol, k, numHashes)
-  def bucketOfBand(numHashes: Int, bands: Int)
-      : Int => org.apache.spark.sql.Column =
-    Dedup.portableBucketOfBand(numHashes, bands)
 }

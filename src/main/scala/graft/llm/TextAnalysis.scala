@@ -49,10 +49,6 @@ object TextAnalysis {
     hits / greatest(size(toks), lit(1)).cast("double")
   }
 
-  def meanWordLength(text: Column): Column =
-    length(regexp_replace(text, "\\s+", "")) /
-      greatest(wsTokenCount(text), lit(1)).cast("double")
-
   /** Composite quality score ∈ [0,1]: rewards doc length up to ~200 chars,
     * some stopword presence, and penalizes punctuation soup. Deterministic
     * arithmetic — SQL-expressible for the oracle.

@@ -677,7 +677,7 @@ object LlmQueries {
       Tables.documents(spark, dir).select("doc_id", "text", "source"))
 
   /** [[q120GopherYield]]'s pipeline over an explicit frame (also the
-    * ScaleProbe entry).
+    * entry point for running it over a replicated corpus).
     */
   def gopherYieldFrames(docs: DataFrame): DataFrame = {
     def v(c: org.apache.spark.sql.Column) =
@@ -711,7 +711,7 @@ object LlmQueries {
     mixedLanguageFrames(Tables.documents(spark, dir))
 
   /** [[q119MixedLanguage]]'s pipeline over an explicit frame (also the
-    * ScaleProbe entry).
+    * entry point for running it over a replicated corpus).
     */
   def mixedLanguageFrames(docs: DataFrame): DataFrame = {
     // per-chunk langId is the heavy part — spread the one-split scan
@@ -1229,7 +1229,7 @@ object LlmQueries {
       Tables.embeddings(spark, dir))
 
   /** [[q116SourceSimilarity]]'s pipeline over explicit frames (also the
-    * ScaleProbe entry).
+    * entry point for running it over a replicated corpus).
     */
   def sourceSimilarityFrames(docs: DataFrame, emb: DataFrame): DataFrame = {
     val dec = "decimal(38,0)"
@@ -2838,7 +2838,7 @@ object LlmQueries {
     *
     * The measured adjudication on a synthetic 90%-hot-key corpus at
     * ×20 (2M rows, broadcast disabled so every variant shuffles,
-    * 3 solo reruns — ScaleProbe `skew_`): unsplit straggler
+    * 3 solo reruns): unsplit straggler
     * 2.28/2.44/2.47 s, AQE split 1.55/1.69/1.71 s, manual
     * [[graft.operators.Skew.saltedJoin]] 1.72/1.88/1.89 s. AQE's
     * runtime split is consistently ~10% ahead of the explicit salt
@@ -4495,7 +4495,8 @@ object LlmQueries {
   def q273KmvJoinCard(spark: SparkSession, dir: String): DataFrame =
     kmvJoinCardOver(Tables.events(spark, dir))
 
-  /** q273's body over any events-shaped frame (ScaleProbe entry). */
+  /** q273's body over any events-shaped frame (so it also runs over a
+    * replicated events table). */
   private[graft] def kmvJoinCardOver(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val k = 64
@@ -6262,7 +6263,8 @@ object LlmQueries {
   }
 
   /** [[q138TokenizerFertility]]'s report over an explicit frame + merge
-    * list (also the spec/ScaleProbe entry).
+    * list (also the spec's entry, and the one for a replicated
+    * corpus).
     */
   def tokenizerFertilityFrames(docs: DataFrame,
                                merges: Seq[(String, String)]): DataFrame = {

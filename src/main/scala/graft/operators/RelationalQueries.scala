@@ -743,8 +743,8 @@ object RelationalQueries {
                        .select(col("c_custkey").as("k")))
   }
 
-  /** q274's frame-parameterized core ([[graft.ScaleProbe]] times it
-    * over replicated corpora and sweeping erase-set sizes).
+  /** q274's frame-parameterized core (so it can be timed over
+    * replicated corpora and sweeping erase-set sizes).
     */
   private[graft] def erasureAuditOver(cust: DataFrame, ord: DataFrame,
                                       li: DataFrame, ev: DataFrame,
@@ -825,16 +825,16 @@ object RelationalQueries {
 
   /** q275's frame-parameterized core: cascade the erase set down to a
     * pure-delete line changelog and retract-roll it out of `standing`
-    * ([[graft.ScaleProbe]] times it with the standing view
-    * materialized, so the probe isolates the erasure overlay).
+    * (takes the standing view as an input, so a timing of it with the
+    * view materialized isolates the erasure overlay).
     *
     * The cascade's intermediates are MATERIALIZED through
     * [[graft.Materialize]]: both are erase-proportional (bounded), the
     * changelog is consumed TWICE downstream (the signed aggregate and
     * the delta-order derivation) so pinning it scans the line corpus
     * ONCE instead of twice, and the downstream plan sees two leaves
-    * instead of the embedded corpus-scan subtrees — the round-13
-    * ErasureProbe measured the un-pinned form at 266 s for the
+    * instead of the embedded corpus-scan subtrees — round 13
+    * measured the un-pinned form at 266 s for the
     * delta-order leg alone at ×20 (nested re-evaluated subplans)
     * vs 2.7 s for the same roll over pinned inputs.
     */
@@ -898,8 +898,9 @@ object RelationalQueries {
       .orderBy("tbl", "col_name")
 
   /** q277's per-column core — ONE partial-agg scan producing the
-    * catalog row ([[graft.ScaleProbe]] times it at ×N; [[graft.plans
-    * .StatsCatalog]] publishes the same statistics in typed form).
+    * catalog row (over any frame, so it can be timed at ×N;
+    * [[graft.plans.StatsCatalog]] publishes the same statistics in
+    * typed form).
     */
   private[graft] def analyzeOneOver(df: DataFrame, tbl: String,
                                     cn: String, kind: String)

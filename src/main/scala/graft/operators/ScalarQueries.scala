@@ -140,13 +140,18 @@ object ScalarQueries {
 
   /** Time-window aggregation over the events table: hourly rollup.
     * date_trunc is a pure expression, so the plan is scan → partial agg →
-    * one shuffle on (hour, type) → final agg. */
+    * one shuffle on (hour, type) → final agg. The mean is the exact
+    * DECIMAL sum over the count, rounded half up: avg(double) + round()
+    * lands either side of a half-way tie depending on summation order,
+    * and the oracle sums in a different order. */
   def q21EventsHourly(spark: SparkSession, dir: String): DataFrame =
     Tables
       .events(spark, dir)
       .withColumn("hour", date_trunc("hour", col("ts")))
       .groupBy("hour", "event_type")
-      .agg(count(lit(1)).as("n"), round(avg("value"), 4).as("value_avg"))
+      .agg(count(lit(1)).as("n"),
+           round(sum(col("value").cast("decimal(18,6)")) / count(lit(1)), 4)
+             .cast("double").as("value_avg"))
       .orderBy("hour", "event_type")
 
   /** Semi-structured extraction: pull the numeric field out of the JSON
@@ -278,8 +283,12 @@ object ScalarQueries {
         |GROUP BY bin
         |ORDER BY bin""".stripMargin,
     "q21_events_hourly" ->
-      """SELECT date_trunc('hour', ts) AS hour, event_type,
-        |  count(*) AS n, round(avg(value), 4) AS value_avg
+      // DuckDB divides DECIMALs in DOUBLE, so the exact half-up mean is
+      // integer arithmetic on the sum in millionths
+      """SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
+        |  CAST((CAST(sum(CAST(value AS DECIMAL(18,6))) * 1000000 AS HUGEINT)
+        |        * 2 + 100 * count(*)) // (200 * count(*)) AS DOUBLE)
+        |    / 10000 AS value_avg
         |FROM events
         |GROUP BY 1, 2
         |ORDER BY hour, event_type""".stripMargin,

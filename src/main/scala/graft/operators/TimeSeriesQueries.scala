@@ -982,7 +982,8 @@ object TimeSeriesQueries {
   def q272LayoutDebt(spark: SparkSession, dir: String): DataFrame =
     layoutDebtOver(Tables.events(spark, dir))
 
-  /** q272's body over any events-shaped frame (ScaleProbe entry). */
+  /** q272's body over any events-shaped frame (so it also runs over a
+    * replicated events table). */
   private[graft] def layoutDebtOver(ev: DataFrame): DataFrame = {
     val z = graft.Materialize(zKeyedOf(ev))
     val cut = lit("2024-01-22").cast("timestamp")

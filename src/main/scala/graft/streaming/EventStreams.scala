@@ -55,17 +55,6 @@ object EventStreams extends Serializable {
              / count(lit(1)).cast("double") * 10000.0d + 0.5d) / 10000.0d)
       .as("value_avg")
 
-  /** Sliding-window variant (overlapping windows). */
-  def slidingCounts(events: DataFrame, windowLen: String = "1 hour",
-                    slide: String = "15 minutes",
-                    lateness: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", lateness)
-      .groupBy(window(col("ts"), windowLen, slide), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-              col("n"))
-
   /** Event-time sessionization: a session closes after `gapMs` of
     * inactivity (enforced via event-time timeout against the watermark).
     * Emits one row per closed session. State per user is four scalars.
@@ -870,6 +859,9 @@ object EventStreams extends Serializable {
     override def handleExpiredTimer(key: (Int, Long), tv: TimerValues,
                                     info: ExpiredTimerInfo)
         : Iterator[InStreamPair] = {
+      // the timer that fired is already gone; deleting it again in
+      // `pin` logs a warning per firing
+      timerAt.clear()
       pin(live(tv.getCurrentWatermarkInMs()),
           tv.getCurrentWatermarkInMs())
       Iterator.empty

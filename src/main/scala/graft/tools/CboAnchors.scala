@@ -67,6 +67,18 @@ object CboAnchors {
       StatsCatalog.publish(spark, mapping(t), cols)
     }
 
+  /** The operating optimizer regime Bench, Verify and Probe run under:
+    * the twins' statistics published on the catalog tables at `dir`,
+    * cbo + join reorder on. Returns the number of tables published.
+    */
+  def operatingRegime(spark: SparkSession, dir: String): Int = {
+    val mapping = ensureTables(spark, dir)
+    publishAll(spark, mapping)
+    spark.conf.set("spark.sql.cbo.enabled", "true")
+    spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
+    mapping.size
+  }
+
   /** One leg of the sweep: compile every twin under the given confs
     * and return name → space-joined join algorithms.
     */

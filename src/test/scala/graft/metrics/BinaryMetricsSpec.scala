@@ -184,6 +184,12 @@ class BinaryMetricsSpec extends SparkSpec {
     assert(h(0L) == 2L)
   }
 
+  test("E7b: class distribution counts each label once, ordered by label") {
+    val d = BinaryMetrics.classDistribution(fixture, "label")
+      .collect().map(r => (r.getDouble(0), r.getLong(1))).toSeq
+    assert(d == Seq((0.0, 20L), (1.0, 20L)))
+  }
+
   test("calibration curve: per-bin counts, mean score, and positive rate") {
     import spark.implicits._
     val df = Seq(

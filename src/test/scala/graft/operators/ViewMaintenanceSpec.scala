@@ -189,8 +189,8 @@ class ViewMaintenanceSpec extends SparkSpec {
     // round-13 pins: (a) the cascade's erase-proportional
     // intermediates are MATERIALIZED — the final plan consumes them
     // as pinned leaves (LogicalRDD) instead of re-evaluating the
-    // embedded corpus-scan subtrees (the ErasureProbe measured the
-    // un-pinned form at 266 s vs 2.7 s at ×20); (b) no broadcast-
+    // embedded corpus-scan subtrees (round 13 measured the un-pinned
+    // form at 266 s vs 2.7 s at ×20); (b) no broadcast-
     // hinted side anywhere is an anti-derived (kept) complement
     val opt = erased.queryExecution.optimizedPlan
     assert(opt.collectLeaves().exists(

@@ -1387,6 +1387,66 @@ class EventStreamsSpec extends SparkSpec {
            s"sentinel buffers once per band: ${stored.length}")
   }
 
+  test("in-stream near-dedup horizon sweep deletes no timer twice: " +
+       "zero timer-deletion warnings while expiry timers fire") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val warnings = new java.util.concurrent.atomic.AtomicInteger(0)
+    val capture = new AbstractAppender("timer-delete-capture", null, null,
+                                       true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN &&
+            e.getMessage.getFormattedMessage
+              .contains("Failed to delete timer"))
+          warnings.incrementAndGet()
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    root.addAppender(capture)
+    val e0 = 86400L
+    val input = MemoryStream[(Long, Long, String)]
+    val base = tmpDir("instream_timers")
+    val q = EventStreams.inStreamNearDedupSink(
+      input.toDF().toDF("doc_id", "epoch", "text")
+        .select(col("doc_id"), timestamp_seconds(col("epoch")).as("ts"),
+                col("text")),
+      "doc_id", "text", "ts", s"$base/out", s"$base/ckpt",
+      lateness = "30 minutes", horizonMs = 3600000L)
+    try {
+      input.addData((1L, e0, "tidal estuaries where silt settles in " +
+                               "slow channels and herons wade"),
+                    (2L, e0 + 60, "compiler passes hoist invariant " +
+                                  "loads out of deeply nested loops"),
+                    (3L, e0 + 120, "yeast converts sugars under careful " +
+                                   "temperature control in vats"))
+      q.processAllAvailable()
+      // two arrivals far past the horizon: the first advances the
+      // watermark, the second runs the batch whose timers expire
+      // every earlier entry
+      input.addData((8L, e0 + 14400, "glacier moraines left by " +
+                                     "retreating ice across valleys"))
+      q.processAllAvailable()
+      input.addData((9L, e0 + 14460, "sentinel text unrelated to every " +
+                                     "previous document entirely"))
+      q.processAllAvailable()
+    } finally {
+      q.stop()
+      root.removeAppender(capture)
+    }
+    val stored = spark.read.format("statestore")
+      .option("path", s"$base/ckpt")
+      .option("stateVarName", "entries").load()
+      .select("list_element.doc_id").collect().map(_.getLong(0)).toSet
+    assert(stored.intersect(Set(1L, 2L, 3L)).isEmpty,
+           s"expiry timers must have swept the early entries: $stored")
+    assert(warnings.get == 0,
+           s"${warnings.get} timer-deletion warnings on the expiry path")
+  }
+
   test("two-layer dedup across an index rotation: the straddling pair " +
        "is invisible to the index pre-roll, caught by BOTH layers " +
        "post-roll, and the union classification counts every planted " +

@@ -4,7 +4,8 @@
 Usage: python3 tools/compare_oracle.py <sfDir> <outDir> [query ...]
        python3 tools/compare_oracle.py --typecheck <sfDir> <oracleJson|outDir> [query ...]
 
-Reads <outDir>/oracle_sql.json (written by graft.Verify / QuickVerify),
+Reads <outDir>/oracle_sql.json (written by graft.Verify; a subset run
+`Verify <sfDir> <outDir> q…` writes only those queries and their oracles),
 registers the parquet tables from <sfDir> as DuckDB views, runs each oracle
 SQL, and compares against the Spark result parquet at <outDir>/<name>/.
 
