@@ -321,32 +321,6 @@ object Bench {
                   else "bench_subset.json"
     try Files.writeString(Paths.get(outFile), fullLine)
     catch { case _: Throwable => () }
-
-    // Standing-regime CBO leg (SPARK_GRAFT_BENCH_CBO=1): stats
-    // published on the sf catalog tables, cbo + joinReorder ON, every
-    // SQL anchor twin EXECUTED and checked bit-identical against the
-    // DataFrame program, with compile-time flip facts — the closing
-    // chain's proof that the engine runs correctly AS an operating
-    // mode under its own optimizer estate, not just in demos. Written
-    // to bench_cbo.json (never into the adjudication artifact).
-    if (subset.isEmpty &&
-        sys.env.get("SPARK_GRAFT_BENCH_CBO").exists(_ == "1")) {
-      val outcomes = graft.tools.CboAnchors.benchLeg(spark, sfDir)
-      val body = outcomes.map { o =>
-        "\"" + o.name + "\":{\"hash_ok\":" + o.hashOk +
-          ",\"default_flip\":" + o.defaultFlip +
-          ",\"scaled_flip\":" + o.scaledFlip +
-          f",\"sec\":${o.sec}%.4f}"
-      }.mkString("{", ",", "}")
-      val cboLine =
-        s"""{"metric":"cbo_anchors","sf":"$sfDir","anchors":$body,"all_hash_ok":${outcomes.forall(_.hashOk)}}"""
-      System.err.println(s"[bench] cbo leg: " +
-        s"${outcomes.count(_.hashOk)}/${outcomes.size} hash-identical, " +
-        s"default flips ${outcomes.count(_.defaultFlip)}, " +
-        s"scaled flips ${outcomes.count(_.scaledFlip)}")
-      try Files.writeString(Paths.get("bench_cbo.json"), cboLine)
-      catch { case _: Throwable => () }
-    }
     spark.stop()
   }
 }

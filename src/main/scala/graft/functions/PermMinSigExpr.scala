@@ -10,13 +10,13 @@ import org.apache.spark.sql.types._
   * permutation family: slot i = min over elements h of
   * `(a_i * (h mod P) + b_i) mod P` with [[PortableHash]] constants —
   * pure overflow-free integer arithmetic a SQL oracle replays from inlined
-  * literals (vs [[MinHashSigExpr]], whose xxhash64 mixing no other engine
-  * reproduces). Fused loop: one `mod P` per element, one multiply-add-mod
+  * literals. Fused loop: one `mod P` per element, one multiply-add-mod
   * per (element, slot), inside whole-stage codegen.
   *
   * Null elements are skipped; an empty/all-null input yields
-  * `Long.MaxValue` sentinels (same documented edge as [[MinHashSigExpr]];
-  * unreachable through `Dedup.shingles`, which never returns empty).
+  * `Long.MaxValue` sentinels, where the HOF formulation's `array_min`
+  * gives null slots (unreachable through `Dedup.shingles`, which never
+  * returns empty). A null array yields null.
   *
   * Registered as SQL `minhash_perm_signature(arr, numHashes)` by
   * [[graft.plans.GraftExtensions]].

@@ -22,10 +22,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * they are index-stable (the first k permutations are the same for every
   * `numHashes >= k`) and can be inlined as literals into oracle SQL.
   *
-  * The xxhash64-based family ([[MinHashSigExpr]], [[SimHash64Expr]]) stays
-  * the throughput champion (no md5 in the inner loop); this family is the
-  * one you run when results must be replayable by another engine — and it
-  * is what the DuckDB correctness oracle checks end-to-end.
+  * It is the engine's only MinHash/SimHash family: results are replayable
+  * by another engine, and the DuckDB correctness oracle checks them
+  * end-to-end.
   */
 object PortableHash {
 

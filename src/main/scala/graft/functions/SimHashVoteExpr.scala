@@ -11,8 +11,8 @@ import org.apache.spark.sql.types._
   * 0 — `2*set > n`, the formulation a SQL oracle replays per bit with a
   * `list_filter` count). The portable simhash kernel: feed it
   * [[Md5Prefix60Expr]] output with `bits = 60` and every step is
-  * replayable in DuckDB, unlike [[SimHash64Expr]]'s engine-private
-  * xxhash64. Null elements are skipped; an empty/all-null array yields 0.
+  * replayable in DuckDB. Null elements are skipped; an empty/all-null
+  * array yields 0; a null array yields null.
   *
   * Registered as SQL `simhash_vote(arr, bits)` by
   * [[graft.plans.GraftExtensions]].

@@ -149,8 +149,8 @@ object BpeTrainer {
   }
 
   /** The composed replace-chain form of [[tokenStream]] — kept as the
-    * readable / property-test twin of the native kernel (the
-    * minhashSignature pattern) and the shape the DuckDB oracle replays.
+    * readable / property-test twin of the native kernel and the shape
+    * the DuckDB oracle replays.
     */
   private[graft] def tokenStreamComposed(text: Column,
                                          merges: Seq[(String, String)])

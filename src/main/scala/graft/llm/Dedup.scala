@@ -182,90 +182,22 @@ object Dedup {
   def shingles(text: Column, k: Int = 5): Column =
     shinglesOfNorm(normalizeText(text), k)
 
-  /** MinHash signature of a shingle set: numHashes universal-hash slots,
-    * each `min over shingles of xxhash64(shingle, seed)` — the HOF spec
-    * formulation (row-local, no UDF, no shuffle). Kept as the readable /
-    * property-test twin of [[minhashSignatureNative]].
-    */
-  def minhashSignature(shingleCol: Column, numHashes: Int = 32): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-              seed => array_min(
-                transform(shingleCol, s => xxhash64(s, seed))))
-
-  /** Same signature via the native codegen'd kernel
-    * ([[graft.functions.MinHashSigExpr]]): hashes each shingle once, then
-    * one cheap mix per seed — vs numHashes × |shingles| interpreted lambda
-    * hashes. The dedup hot path.
-    */
-  def minhashSignatureNative(shingleCol: Column, numHashes: Int = 32): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(graft.functions.MinHashSigExpr(
-      ColumnBridge.expression(shingleCol), numHashes))
-  }
-
-  /** MinHash+LSH near-dup candidates: signature → `bands` band-hashes →
-    * explode → groupBy band-bucket. Docs sharing ANY band bucket are
-    * candidates; exact Jaccard is then computed only within buckets via a
-    * self-join ON the bucket key (never a cartesian).
+  /** MinHash+LSH near-dup candidates over the portable
+    * ([[graft.functions.PortableHash]]) family: md5-prefix shingle
+    * hashes, modular permutation signatures, fold-mod band buckets —
+    * every step replayable by another SQL engine from inlined constants,
+    * which is how the DuckDB oracle checks the whole near-dedup pipeline.
+    * Docs sharing ANY band bucket are candidates; exact Jaccard is then
+    * computed only within buckets via a self-join ON the bucket key
+    * (never a cartesian), through [[pairsFromSigTable]].
     *
     * Returns (doc_a, doc_b, jaccard) pairs with doc_a < doc_b and
     * jaccard >= threshold.
     *
-    * Scale: the only shuffles are the explode-groupBy on band keys and the
-    * bucket self-join; band-bucket skew (a hot bucket) is bounded by
+    * Scale: band-bucket skew (a hot bucket) is bounded by
     * `maxBucket` — buckets larger than that are dropped (standard
     * web-dedup guard: a bucket that big means boilerplate, handled by
     * exact dedup instead).
-    */
-  def minhashCandidatePairs(df: DataFrame, idCol: String, textCol: String,
-                            k: Int = 5, numHashes: Int = 32, bands: Int = 8,
-                            threshold: Double = 0.5,
-                            maxBucket: Int = 1000): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rowsPerBand = numHashes / bands
-
-    // Shingle sets are carried as xxhash64 values, not strings: the
-    // within-bucket verify intersects arrays of longs (single compare per
-    // element, no UTF8 hashing) and every shuffle of a shingle set moves
-    // 8 bytes/shingle instead of the string bytes. Jaccard over hashed
-    // shingles equals string Jaccard unless xxhash64 collides inside one
-    // document's ~10²-shingle set (P ≈ |sh|²/2⁶⁴ ≈ 1e-15 — negligible).
-    // The signature table is referenced three times below (banding + both
-    // sides of the shingle-set lookup) — materialize it once instead of
-    // re-shingling the corpus per reference. This is the standard
-    // "signature table" pass of production dedup pipelines (at cluster
-    // scale: write it out / reliable-checkpoint it; blocks here are freed
-    // by the ContextCleaner when unreferenced).
-    val sigs = parallelizeCompute(df, idCol).select(
-      col(idCol).as("doc_id"),
-      normalizeText(col(textCol)).as("norm"))
-      .select(col("doc_id"), shinglesOfNorm(col("norm"), k).as("sh"))
-      .withColumn("sig", minhashSignatureNative(col("sh"), numHashes))
-      // shh is consumed ONLY as a set (jaccard verify) — sort it once
-      // per doc at build so the per-pair kernel's sort degenerates to a
-      // linear sortedness check (round-18; a doc's array used to be
-      // re-sorted once per candidate pair it appears in)
-      .withColumn("shh", sort_array {
-        import org.apache.spark.sql.graftbridge.ColumnBridge
-        ColumnBridge.column(graft.functions.XxHash64ArrayExpr(
-          ColumnBridge.expression(col("sh"))))
-      })
-      .select("doc_id", "sig", "shh")
-      .transform(graft.Materialize(_))
-
-    // band hash = xxhash64 over the band's slice of the signature.
-    val bucketOfBand = (b: Int) =>
-      xxhash64(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand), lit(b))
-    pairsFromSigTable(sigs, bands, bucketOfBand, threshold, maxBucket)
-  }
-
-  /** The portable ([[graft.functions.PortableHash]]) twin of
-    * [[minhashCandidatePairs]]: md5-prefix shingle hashes, modular
-    * permutation signatures, fold-mod band buckets — every step
-    * replayable by another SQL engine from inlined constants, which is
-    * how the DuckDB oracle checks the whole near-dedup pipeline (the
-    * xxhash64 family is faster but engine-private). Identical banding /
-    * bucket-join / salting / verify plumbing via [[pairsFromSigTable]].
     */
   def minhashCandidatePairsPortable(df: DataFrame, idCol: String,
                                     textCol: String,
@@ -279,12 +211,6 @@ object Dedup {
                       threshold, maxBucket)
   }
 
-  /** The portable-family signature table: (doc_id, sig, shh) with
-    * md5-prefix60 hashed shingle sets and mod-P permutation signatures.
-    * Materialized (localCheckpoint) because every consumer references it
-    * 2-3 times; at cluster scale this is the relation a persisted dedup
-    * index stores.
-    */
   private[llm] def md5Prefix60(c: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     ColumnBridge.column(graft.functions.Md5Prefix60Expr(
@@ -297,6 +223,22 @@ object Dedup {
       ColumnBridge.expression(c), numHashes))
   }
 
+  /** The portable-family signature table: (doc_id, sig, shh) with
+    * md5-prefix60 hashed shingle sets and mod-P permutation signatures.
+    *
+    * Shingle sets are carried as 60-bit hashes, not strings: the
+    * within-bucket verify intersects arrays of longs and every shuffle of
+    * a shingle set moves 8 bytes/shingle instead of the string bytes.
+    * Jaccard over hashed shingles equals string Jaccard unless two
+    * shingles of one ~10²-shingle document collide (P ≈ |sh|²/2⁶⁰ —
+    * negligible).
+    *
+    * Materialized (localCheckpoint) because every consumer references it
+    * 2-3 times (banding + both sides of the shingle-set lookup) —
+    * re-shingling the corpus per reference is the cost it avoids. This is
+    * the standard "signature table" pass of production dedup pipelines;
+    * at cluster scale it is the relation a persisted dedup index stores.
+    */
   private def portableSigTable(df: DataFrame, idCol: String,
                                textCol: String, k: Int,
                                numHashes: Int): DataFrame = {
@@ -307,8 +249,10 @@ object Dedup {
       .select(col("doc_id"), shinglesOfNorm(col("norm"), k).as("sh"))
       .withColumn("shh", md5Prefix60(col("sh")))
       // permSig is a min over elements (order-invariant); shh itself is
-      // consumed only as a set — pre-sort once per doc for the verify
-      // kernel (round-18, see minhashCandidatePairs)
+      // consumed only as a set — pre-sort once per doc so the per-pair
+      // verify kernel's sort degenerates to a linear sortedness check
+      // (round-18; a doc's array used to be re-sorted once per candidate
+      // pair it appears in)
       .withColumn("sig", permSig(col("shh")))
       .withColumn("shh", sort_array(col("shh")))
       .select("doc_id", "sig", "shh")
@@ -661,15 +605,6 @@ object Dedup {
                            .unionByName(deltaDelta))
   }
 
-  /** Shared LSH plumbing of both minhash families: band-bucket explode →
-    * size-guarded bucket self-join (salted) → distinct pairs → in-bucket
-    * exact-Jaccard verify. `sigs` must expose (doc_id, sig, shh);
-    * `bucketOfBand(b)` yields band b's bucket key off `sig`.
-    *
-    * Only (doc_id, band, bucket) flows into the explode/window/join —
-    * shingle sets are joined back AFTER candidate pairs are deduped, so
-    * the band duplication and the bucket shuffle stay narrow.
-    */
   /** The maxBucket boilerplate guard: drop every row of a (band, bucket)
     * whose occupancy exceeds `maxBucket`. Counter + anti-join shape
     * (round-18): a map-side-combined count over the narrow key yields
@@ -688,6 +623,16 @@ object Dedup {
     banded.join(hot, Seq("band", "bucket"), "left_anti")
   }
 
+  /** Shared LSH plumbing of the minhash pair generators
+    * ([[minhashCandidatePairsPortable]], [[rollClusters]]): band-bucket
+    * explode → size-guarded bucket self-join (salted) → distinct pairs →
+    * in-bucket exact-Jaccard verify. `sigs` must expose (doc_id, sig, shh);
+    * `bucketOfBand(b)` yields band b's bucket key off `sig`.
+    *
+    * Only (doc_id, band, bucket) flows into the explode/window/join —
+    * shingle sets are joined back AFTER candidate pairs are deduped, so
+    * the band duplication and the bucket shuffle stay narrow.
+    */
   private def pairsFromSigTable(sigs: DataFrame, bands: Int,
                                 bucketOfBand: Int => Column,
                                 threshold: Double,
@@ -899,15 +844,6 @@ object Dedup {
   }
 
   /** End-to-end MinHash near-dedup: candidates → clusters. */
-  def minhash(df: DataFrame, idCol: String, textCol: String,
-              k: Int = 5, numHashes: Int = 32, bands: Int = 8,
-              threshold: Double = 0.5): DataFrame =
-    clustersFromPairs(df, idCol, textCol,
-      minhashCandidatePairs(df, idCol, textCol, k, numHashes, bands, threshold))
-
-  /** End-to-end portable MinHash near-dedup (the DuckDB-oracled family):
-    * candidates → clusters.
-    */
   def minhashPortable(df: DataFrame, idCol: String, textCol: String,
                       k: Int = 5, numHashes: Int = 32, bands: Int = 8,
                       threshold: Double = 0.5): DataFrame =
@@ -944,45 +880,8 @@ object Dedup {
               (col("doc_id") === col("__m.kid")).as("keep"))
   }
 
-  /** 64-bit SimHash over whitespace tokens — row-local, no explode, no
-    * shuffle: per-token xxhash64, then per-bit vote via one `aggregate`
-    * higher-order fold (bit i of the result = majority sign of bit i over
-    * token hashes). The vote vector is a named intermediate column so the
-    * fold runs once per row (CollapseProject keeps non-cheap expressions
-    * single-use); final assembly reads 64 cheap `element_at`s off it.
-    */
-  def withSimhash(df: DataFrame, textCol: String,
-                  outCol: String = "simhash64"): DataFrame = {
-    val toks = array_distinct(
-      filter(split(lower(trim(col(textCol))), "\\W+"), t => length(t) > 0))
-    val hashes = transform(toks, t => xxhash64(t))
-    val votes = aggregate(
-      hashes,
-      transform(sequence(lit(0), lit(63)), _ => lit(0)),
-      (acc, h) =>
-        zip_with(acc, sequence(lit(0), lit(63)),
-                 (a, bit) => a + when(getbit(h, bit) === 1, 1).otherwise(-1)))
-    val assembled = (0 until 64)
-      .map(i => when(element_at(col("__simhash_votes"), i + 1) > 0,
-                     lit(1L << i)).otherwise(lit(0L)))
-      .reduce((a, b) => a.bitwiseOR(b))
-    df.withColumn("__simhash_votes", votes)
-      .withColumn(outCol, assembled)
-      .drop("__simhash_votes")
-  }
-
-  /** Same SimHash via the native codegen'd Catalyst expression
-    * ([[graft.functions.SimHash64Expr]], registered as SQL `simhash64` by
-    * GraftExtensions) — the hot-path variant; the HOF formulation above is
-    * the readable spec both are property-tested against.
-    */
-  def withSimhashNative(df: DataFrame, textCol: String,
-                        outCol: String = "simhash64"): DataFrame =
-    df.withColumn(outCol, expr(s"simhash64(${tokenizeSql(textCol)})"))
-
-  /** SQL fragment producing the same distinct-token array as
-    * [[withSimhash]]'s tokenizer — kept in one place so both simhash
-    * variants tokenize identically.
+  /** SQL fragment producing the simhash input: the distinct non-empty
+    * `\W+`-split tokens of the lower-cased, trimmed text.
     */
   private def tokenizeSql(textCol: String): String =
     s"array_distinct(filter(split(lower(trim($textCol)), '\\\\W+'), " +
@@ -992,62 +891,17 @@ object Dedup {
     * same distinct-token tokenizer, tokens hashed by md5-prefix60 and
     * bit-voted by [[graft.functions.SimHashVoteExpr]] — every step
     * replayable per-bit in DuckDB SQL, which is how the oracle checks it.
-    * The xxhash64 [[withSimhashNative]] stays the throughput variant.
     */
   def withSimhashPortable(df: DataFrame, textCol: String,
                           outCol: String = "simhash60"): DataFrame =
     df.withColumn(outCol,
       expr(s"simhash_vote(md5prefix60(${tokenizeSql(textCol)}), 60)"))
 
-  /** SimHash near-dup candidates: docs whose simhash matches exactly on at
-    * least one of 4 16-bit bands (guaranteed recall for Hamming distance
-    * ≤ 3). Same band-bucket-join shape as MinHash — no all-pairs stage,
-    * and the same `maxBucket` guard: a band bucket holding more than
-    * `maxBucket` docs (boilerplate storm) is dropped before the
-    * within-bucket self-join, bounding candidates at maxBucket² per
-    * bucket; such mass-duplicate text is exact-dedup's job.
-    */
-  def simhashCandidates(df: DataFrame, idCol: String,
-                        textCol: String,
-                        maxBucket: Int = 1000): DataFrame = {
-    val sh = withSimhashNative(df.select(col(idCol).as("doc_id"),
-                                         col(textCol)), textCol, "sh64")
-      .select("doc_id", "sh64")
-    val bandArr = array((0 until 4).map { b =>
-      shiftright(col("sh64"), b * 16).bitwiseAND(lit(0xFFFFL))
-    }: _*)
-    // window guard, NOT dropHotBuckets (round-18, measured): the banded
-    // subtree here is unmaterialized and its simhash upstream is the
-    // expensive part — the anti-join shape references it twice and
-    // recomputes it, while the window reuses one shuffle
-    val bucketW = Window.partitionBy("band", "bucket")
-    val banded = sh.select(col("doc_id"), col("sh64"), posexplode(bandArr))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bucket")
-      .withColumn("bsize", count(lit(1)).over(bucketW))
-      .filter(col("bsize") <= maxBucket)
-      .drop("bsize")
-    // salted self-join — same straggler guard as minhashCandidatePairs
-    val S = 8
-    val a = banded.select(col("band"), col("bucket"),
-                          col("doc_id").as("doc_a"), col("sh64").as("ha"))
-      .withColumn("salt", pmod(xxhash64(col("doc_a")), lit(S)).cast("int"))
-    val b = banded.select(col("band"), col("bucket"),
-                          col("doc_id").as("doc_b"), col("sh64").as("hb"))
-      .withColumn("salt", explode(array((0 until S).map(lit): _*)))
-    a.join(b, Seq("band", "bucket", "salt"))
-      .drop("salt")
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-              bit_count(col("ha").bitwiseXOR(col("hb"))).as("hamming"))
-      .distinct()
-  }
-
-  /** Portable twin of [[simhashCandidates]]: 60-bit portable simhash,
-    * 4 × 15-bit bands (guaranteed recall for Hamming ≤ 3), same
-    * size-guarded salted bucket self-join — every step (bit votes, band
-    * extraction, XOR popcount) replayable in DuckDB SQL, which is how
-    * q72's oracle checks the whole candidate pipeline.
+  /** SimHash near-dup candidates: 60-bit portable simhash, 4 × 15-bit
+    * bands (guaranteed recall for Hamming ≤ 3), the size-guarded salted
+    * bucket self-join of [[hammingCandidatesPortable]] — every step (bit
+    * votes, band extraction, XOR popcount) replayable in DuckDB SQL,
+    * which is how q72's oracle checks the whole candidate pipeline.
     */
   def simhashCandidatesPortable(df: DataFrame, idCol: String,
                                 textCol: String,
@@ -1076,10 +930,12 @@ object Dedup {
     val bandArr = array((0 until 4).map { b =>
       shiftright(col("h60"), b * 15).bitwiseAND(lit(0x7FFFL))
     }: _*)
-    // window guard, NOT dropHotBuckets: same reasoning as
-    // [[simhashCandidates]] — `hashed` is often an unmaterialized
-    // pixel/image-hash subtree (q164 measured 1.1→2.4 s under the
-    // anti-join shape from the doubled upstream compute)
+    // window guard, NOT dropHotBuckets (round-18, measured): the banded
+    // subtree here is unmaterialized and its hash upstream is the
+    // expensive part — the anti-join shape references it twice and
+    // recomputes it, while the window reuses one shuffle. `hashed` is
+    // often a pixel/image-hash subtree (q164 measured 1.1→2.4 s under
+    // the anti-join shape from the doubled upstream compute)
     val bucketW = Window.partitionBy("band", "bucket")
     val banded = hashed.select(col("doc_id"), col("h60"),
                                posexplode(bandArr))
@@ -1214,7 +1070,7 @@ object Dedup {
 
   /** The within-cell pair stage of [[semanticDedupWithIndex]], exposed
     * standalone: (doc_a, doc_b, cos) for every same-cell pair at or above
-    * `threshold`. Salted cell self-join — the [[minhashCandidatePairs]]
+    * `threshold`. Salted cell self-join — the [[pairsFromSigTable]]
     * straggler guard — with the `maxCell` degenerate-cell cutoff applied
     * first; never a cartesian.
     */

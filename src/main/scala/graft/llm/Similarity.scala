@@ -546,7 +546,7 @@ object Similarity {
     * Skew guard: the bucket equi-join is quadratic WITHIN a bucket, so a
     * hot bucket (clustered corpus, too few bits) is a scale-killer. Each
     * side drops buckets holding more than `maxBucket` of its rows before
-    * the join (the [[Dedup.minhashCandidatePairs]] guard), capping the
+    * the join (the [[Dedup.minhashCandidatePairsPortable]] guard), capping the
     * per-bucket candidate count at maxBucket². Sizing rule: choose
     * nBits ≈ log2(N / targetBucketSize) so the EXPECTED bucket holds
     * `targetBucketSize` rows and the guard only fires on pathological
@@ -563,7 +563,7 @@ object Similarity {
         .filter(col("bsize") <= maxBucket)
         .drop("bsize")
     }
-    // salted bucket join — same straggler guard as minhashCandidatePairs:
+    // salted bucket join — same straggler guard as Dedup.pairsFromSigTable:
     // a bucket at the maxBucket cap emits its quadratic pair set across S
     // tasks instead of one
     val S = 8

@@ -79,8 +79,7 @@ object LlmQueries {
 
   /** Portable 60-bit SimHash signatures + 15-bit band-0 buckets — FULLY
     * oracle-checked: DuckDB recomputes every bit's majority vote over the
-    * md5-prefix token hashes. (The xxhash64 simhash64 stays the
-    * throughput variant, property-tested in DedupSpec.)
+    * md5-prefix token hashes.
     */
   def q36Simhash(spark: SparkSession, dir: String): DataFrame =
     Dedup.withSimhashPortable(Tables.documents(spark, dir), "text", "simhash60")
@@ -7312,10 +7311,7 @@ object LlmQueries {
     * enough that AQE replanning stays trivial. `past = None` audits
     * report 0 (as before, via a constant-false predicate).
     */
-  private def AuditFuseGroup: Int =
-    // clamp: a non-positive override would make grouped(n) throw
-    math.max(1, sys.env.get("SPARK_GRAFT_AUDIT_FUSE")
-      .flatMap(_.toIntOption).getOrElse(6))
+  private val AuditFuseGroup = 6
   private def fusedAuditRows(
       specs: Seq[(DataFrame, String, DataFrame, Option[Column])])
       : Seq[(Long, Long, Long)] = {

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{CosineArgmaxExpr, CosineSimExpr, JaccardLongExpr, Md5Prefix60Expr, MinHashSigExpr, NfcNormalizeExpr, PermMinSigExpr, SimHash64Expr, SimHashVoteExpr, XxHash64ArrayExpr}
+import graft.functions.{CosineArgmaxExpr, CosineSimExpr, JaccardLongExpr, Md5Prefix60Expr, NfcNormalizeExpr, PermMinSigExpr, SimHashVoteExpr}
 import org.apache.spark.sql.catalyst.expressions.Literal
 
 /** Engine extension point, wired via `spark.sql.extensions` (set in
@@ -14,13 +14,6 @@ import org.apache.spark.sql.catalyst.expressions.Literal
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64Expr].getName, "simhash64"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "simhash64 takes exactly one argument")
-        SimHash64Expr(children.head)
-      }))
     ext.injectFunction((
       new FunctionIdentifier("cosine_sim"),
       new ExpressionInfo(classOf[CosineSimExpr].getName, "cosine_sim"),
@@ -43,19 +36,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         JaccardLongExpr(children.head, children(1))
       }))
     ext.injectFunction((
-      new FunctionIdentifier("minhash_signature"),
-      new ExpressionInfo(classOf[MinHashSigExpr].getName, "minhash_signature"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-                "minhash_signature takes (array<string>, numHashes literal)")
-        val n = children(1) match {
-          case Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"numHashes must be an integer literal, got $other")
-        }
-        MinHashSigExpr(children.head, n)
-      }))
-    ext.injectFunction((
       new FunctionIdentifier("md5prefix60"),
       new ExpressionInfo(classOf[Md5Prefix60Expr].getName, "md5prefix60"),
       (children: Seq[Expression]) => {
@@ -75,14 +55,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
             s"numHashes must be an integer literal, got $other")
         }
         PermMinSigExpr(children.head, n)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("xxhash64_array"),
-      new ExpressionInfo(classOf[XxHash64ArrayExpr].getName, "xxhash64_array"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1,
-                "xxhash64_array takes exactly one argument")
-        XxHash64ArrayExpr(children.head)
       }))
     ext.injectFunction((
       new FunctionIdentifier("cosine_argmax"),

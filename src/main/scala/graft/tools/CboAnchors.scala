@@ -187,47 +187,6 @@ object CboAnchors {
     }.flatten
   }
 
-  /** One anchor's standing-regime outcome: answers bit-identical to
-    * the DataFrame program, plan flips at default and scaled
-    * thresholds, and the executed-under-CBO latency.
-    */
-  final case class AnchorOutcome(name: String, hashOk: Boolean,
-                                 defaultFlip: Boolean,
-                                 scaledFlip: Boolean, sec: Double)
-
-  /** The standing-regime leg the closing bench runs (env-gated there):
-    * statistics published once on the sf catalog tables, CBO + join
-    * reorder ENABLED, every SQL anchor twin EXECUTED — not just
-    * compiled — with its full result checked bit-identical against the
-    * engine's DataFrame program for the same query, plus the
-    * compile-time flip facts from [[sweep]]. This is the round-15
-    * promotion of the CBO estate from per-experiment demos to the
-    * engine's operating mode: the artifact records, per anchor, that
-    * running WITH the optimizer estate changes plans where expected
-    * and answers nowhere.
-    */
-  def benchLeg(spark: SparkSession, dir: String): Seq[AnchorOutcome] = {
-    val flips = sweep(spark, dir).toMap // leaves stats published
-    val mapping = ensureTables(spark, dir)
-    StatsCatalog.withConfs(spark,
-      "spark.sql.cbo.enabled" -> "true",
-      "spark.sql.cbo.joinReorder.enabled" -> "true") {
-      SqlAnchors.twins.map { case (name, sql) =>
-        val bound = SqlAnchors.rebind(sql, mapping)
-        spark.sql(bound).collect() // warm
-        val t0 = System.nanoTime()
-        val viaCbo = spark.sql(bound).collect().toSeq
-        val sec = (System.nanoTime() - t0) / 1e9
-        val viaDf = graft.SparkEntry.queries(name)(spark, dir)
-          .collect().toSeq
-        val legs = flips(name)
-        AnchorOutcome(name, viaCbo == viaDf,
-                      legs("blind") != legs("cbo"),
-                      legs("blind@128k") != legs("cbo@128k"), sec)
-      }
-    }
-  }
-
   private def printSweep(rows: Seq[(String, Map[String, String])])
       : Unit =
     rows.foreach { case (name, legs) =>

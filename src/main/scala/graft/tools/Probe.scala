@@ -48,7 +48,7 @@ object Probe {
   private val wrappers = Seq("graft.Materialize", "graft.SavedOnce")
 
   /** The innermost `graft.` frame of a call-site stack that is not a
-    * [[wrappers]] frame, e.g. `graft.llm.Dedup$.minhash(Dedup.scala:42)`.
+    * [[wrappers]] frame, e.g. `graft.llm.Dedup$.minhashPortable(Dedup.scala:42)`.
     */
   private def graftSite(stack: String): Option[String] =
     stack.linesIterator.map(_.trim).find(f =>

@@ -92,7 +92,8 @@ class PropertyInvariantsSpec extends SparkSpec {
       val rev = sets.zipWithIndex.map { case (s, i) => (i.toLong, s.reverse) }
         .toDF("id", "sh")
       def sigs(df: org.apache.spark.sql.DataFrame) = df
-        .select(col("id"), Dedup.minhashSignatureNative(col("sh"), 16).as("s"))
+        .select(col("id"),
+                expr("minhash_perm_signature(md5prefix60(sh), 16)").as("s"))
         .orderBy("id").collect().map(_.getSeq[Long](1)).toSeq
       assert(sigs(fwd) == sigs(rev), "min over a set ignores order")
       assert(sigs(fwd).forall(_.length == 16))

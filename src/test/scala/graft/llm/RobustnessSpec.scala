@@ -28,10 +28,11 @@ class RobustnessSpec extends SparkSpec {
 
   test("dedup family on empty input returns empty, no exceptions") {
     assert(Dedup.exact(emptyDocs, "doc_id", "text").count() == 0)
-    assert(Dedup.minhash(emptyDocs, "doc_id", "text").count() == 0)
-    assert(Dedup.minhashCandidatePairs(emptyDocs, "doc_id", "text")
+    assert(Dedup.minhashPortable(emptyDocs, "doc_id", "text").count() == 0)
+    assert(Dedup.minhashCandidatePairsPortable(emptyDocs, "doc_id", "text")
       .count() == 0)
-    assert(Dedup.simhashCandidates(emptyDocs, "doc_id", "text").count() == 0)
+    assert(Dedup.simhashCandidatesPortable(emptyDocs, "doc_id", "text")
+      .count() == 0)
   }
 
   test("dedup family on a single row yields one self-cluster") {
@@ -40,7 +41,7 @@ class RobustnessSpec extends SparkSpec {
     val exact = Dedup.exact(one, "doc_id", "text").collect()
     assert(exact.length == 1 && exact(0).getLong(1) == 7L &&
            !exact(0).getBoolean(2))
-    val mh = Dedup.minhash(one, "doc_id", "text").collect()
+    val mh = Dedup.minhashPortable(one, "doc_id", "text").collect()
     assert(mh.length == 1 && mh(0).getLong(1) == 7L)
   }
 
