@@ -126,12 +126,10 @@ object IndexStore {
   private[graft] val failBeforeCommit =
     new java.util.concurrent.atomic.AtomicBoolean(false)
 
-  /** Drop `table` AND its on-disk location — the legacy single-version
-    * helper, retained for plain (non-index) artifact tables that overwrite
-    * in place. Index publication itself no longer uses it: see the
-    * versioned-publication scaladoc above.
+  /** Drop `table` AND its on-disk location: the last step of dropping
+    * a versioned table ([[dropOne]]).
     */
-  private[graft] def dropWithLocation(spark: SparkSession, table: String,
+  private def dropWithLocation(spark: SparkSession, table: String,
                                     dir: Option[String]): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS $table")
     val p = new Path(location(spark, table, dir))
@@ -373,31 +371,6 @@ object IndexStore {
         .foreach(r => spark.sql(s"DROP TABLE IF EXISTS ${r.getString(1)}"))
     }
 
-  private def writeBucketedTable(df: DataFrame, table: String,
-                                 numBuckets: Int, keys: Seq[String],
-                                 dir: Option[String]): Unit =
-    publishTable(df, table, Some((numBuckets, keys)), dir)
-
-  /** Versioned publish of a small UNBUCKETED side table (IVF centroids,
-    * BM25 stats) with a numBuckets=0 descriptor — same commit protocol
-    * as the bucketed tables.
-    */
-  private def savePlainTable(df: DataFrame, table: String,
-                             dir: Option[String]): Unit =
-    publishTable(df, table, None, dir)
-
-  // NOTE (round-18, measured): a size-gated coalesce here (partition
-  // count ∝ file bytes) fixed the manifest-scale task storms (q144
-  // 0.34→0.19 s) but SERIALIZED every compute-heavy consumer of a
-  // loaded index — coalesce adds no shuffle boundary, so the whole
-  // downstream row-local pipeline fused into its 1–2 tasks (q188
-  // 0.70→1.20 s, q190 0.94→2.71 s, q76/q151 ~1.8× worse). Reverted;
-  // the KB-scale 32-task reads are a benign local-mode artifact that
-  // disappears at scale (real indexes fill their buckets).
-  private def loadTable(spark: SparkSession, table: String,
-                        dir: Option[String]): DataFrame =
-    spark.table(resolve(spark, table, dir))
-
   // ---------------------------------------------------------------- MinHash
 
   /** Persist a [[Dedup.MinhashIndex]] as two bucketed tables:
@@ -407,10 +380,10 @@ object IndexStore {
   def saveMinhashIndex(index: Dedup.MinhashIndex, name: String,
                        numBuckets: Int = 32,
                        dir: Option[String] = None): Unit = {
-    writeBucketedTable(index.buckets, s"${name}_buckets", numBuckets,
-                       Seq("band", "bucket"), dir.map(d => s"$d/buckets"))
-    writeBucketedTable(index.shingles, s"${name}_shingles", numBuckets,
-                       Seq("corpus_id"), dir.map(d => s"$d/shingles"))
+    saveBucketedArtifact(index.buckets, s"${name}_buckets", numBuckets,
+                         Seq("band", "bucket"), dir.map(d => s"$d/buckets"))
+    saveBucketedArtifact(index.shingles, s"${name}_shingles", numBuckets,
+                         Seq("corpus_id"), dir.map(d => s"$d/shingles"))
   }
 
   /** Load a persisted MinHash index; the returned frames carry the bucket
@@ -422,8 +395,9 @@ object IndexStore {
   def loadMinhashIndex(spark: SparkSession, name: String,
                        dir: Option[String] = None): Dedup.MinhashIndex =
     Dedup.MinhashIndex(
-      loadTable(spark, s"${name}_buckets", dir.map(d => s"$d/buckets")),
-      loadTable(spark, s"${name}_shingles", dir.map(d => s"$d/shingles")))
+      loadPlainArtifact(spark, s"${name}_buckets", dir.map(d => s"$d/buckets")),
+      loadPlainArtifact(spark, s"${name}_shingles",
+                        dir.map(d => s"$d/shingles")))
 
   // ------------------------------------------------------------ fingerprint
 
@@ -433,11 +407,11 @@ object IndexStore {
   def saveFingerprintIndex(index: DataFrame, name: String,
                            numBuckets: Int = 32,
                            dir: Option[String] = None): Unit =
-    writeBucketedTable(index, name, numBuckets, Seq("fp"), dir)
+    saveBucketedArtifact(index, name, numBuckets, Seq("fp"), dir)
 
   def loadFingerprintIndex(spark: SparkSession, name: String,
                            dir: Option[String] = None): DataFrame =
-    loadTable(spark, name, dir)
+    loadPlainArtifact(spark, name, dir)
 
   // -------------------------------------------------------------------- LSH
 
@@ -447,11 +421,11 @@ object IndexStore {
   def saveLshIndex(index: DataFrame, name: String,
                    numBuckets: Int = 32,
                    dir: Option[String] = None): Unit =
-    writeBucketedTable(index, name, numBuckets, Seq("bucket"), dir)
+    saveBucketedArtifact(index, name, numBuckets, Seq("bucket"), dir)
 
   def loadLshIndex(spark: SparkSession, name: String,
                    dir: Option[String] = None): DataFrame =
-    loadTable(spark, name, dir)
+    loadPlainArtifact(spark, name, dir)
 
   // -------------------------------------------------------------------- IVF
 
@@ -461,17 +435,19 @@ object IndexStore {
   def saveIvfIndex(index: Similarity.IvfIndex, name: String,
                    numBuckets: Int = 16,
                    dir: Option[String] = None): Unit = {
-    writeBucketedTable(index.assigned, s"${name}_assigned", numBuckets,
-                       Seq("cell"), dir.map(d => s"$d/assigned"))
-    savePlainTable(index.centroids, s"${name}_centroids",
-                   dir.map(d => s"$d/centroids"))
+    saveBucketedArtifact(index.assigned, s"${name}_assigned", numBuckets,
+                         Seq("cell"), dir.map(d => s"$d/assigned"))
+    savePlainArtifact(index.centroids, s"${name}_centroids",
+                      dir.map(d => s"$d/centroids"))
   }
 
   def loadIvfIndex(spark: SparkSession, name: String,
                    dir: Option[String] = None): Similarity.IvfIndex =
     Similarity.IvfIndex(
-      loadTable(spark, s"${name}_assigned", dir.map(d => s"$d/assigned")),
-      loadTable(spark, s"${name}_centroids", dir.map(d => s"$d/centroids")))
+      loadPlainArtifact(spark, s"${name}_assigned",
+                        dir.map(d => s"$d/assigned")),
+      loadPlainArtifact(spark, s"${name}_centroids",
+                        dir.map(d => s"$d/centroids")))
 
   // -------------------------------------------------------------------- PQ
 
@@ -484,17 +460,18 @@ object IndexStore {
   def savePqIndex(index: Similarity.PqIndex, name: String,
                   numBuckets: Int = 16,
                   dir: Option[String] = None): Unit = {
-    writeBucketedTable(index.codes, s"${name}_codes", numBuckets,
-                       Seq("corpus_id"), dir.map(d => s"$d/codes"))
-    savePlainTable(index.codebooks, s"${name}_codebooks",
-                   dir.map(d => s"$d/codebooks"))
+    saveBucketedArtifact(index.codes, s"${name}_codes", numBuckets,
+                         Seq("corpus_id"), dir.map(d => s"$d/codes"))
+    savePlainArtifact(index.codebooks, s"${name}_codebooks",
+                      dir.map(d => s"$d/codebooks"))
   }
 
   def loadPqIndex(spark: SparkSession, name: String,
                   dir: Option[String] = None): Similarity.PqIndex = {
-    val codes = loadTable(spark, s"${name}_codes", dir.map(d => s"$d/codes"))
-    val cb = loadTable(spark, s"${name}_codebooks",
-                       dir.map(d => s"$d/codebooks"))
+    val codes = loadPlainArtifact(spark, s"${name}_codes",
+                                  dir.map(d => s"$d/codes"))
+    val cb = loadPlainArtifact(spark, s"${name}_codebooks",
+                               dir.map(d => s"$d/codebooks"))
     val shape = cb.agg(
       org.apache.spark.sql.functions.max("sub"),
       org.apache.spark.sql.functions.max(
@@ -516,9 +493,9 @@ object IndexStore {
   def saveBm25Index(index: Relevance.Bm25Index, name: String,
                     numBuckets: Int = 32,
                     dir: Option[String] = None): Unit = {
-    writeBucketedTable(index.postings, s"${name}_postings", numBuckets,
-                       Seq("token"), dir.map(d => s"$d/postings"))
-    savePlainTable(index.stats, s"${name}_stats", dir.map(d => s"$d/stats"))
+    saveBucketedArtifact(index.postings, s"${name}_postings", numBuckets,
+                         Seq("token"), dir.map(d => s"$d/postings"))
+    savePlainArtifact(index.stats, s"${name}_stats", dir.map(d => s"$d/stats"))
   }
 
   /** Positional postings ([[Relevance.positionalIndex]]), bucketed +
@@ -528,18 +505,20 @@ object IndexStore {
   def savePositionalIndex(index: DataFrame, name: String,
                           numBuckets: Int = 32,
                           dir: Option[String] = None): Unit =
-    writeBucketedTable(index, s"${name}_positions", numBuckets,
-                       Seq("token"), dir.map(d => s"$d/positions"))
+    saveBucketedArtifact(index, s"${name}_positions", numBuckets,
+                         Seq("token"), dir.map(d => s"$d/positions"))
 
   def loadPositionalIndex(spark: SparkSession, name: String,
                           dir: Option[String] = None): DataFrame =
-    loadTable(spark, s"${name}_positions", dir.map(d => s"$d/positions"))
+    loadPlainArtifact(spark, s"${name}_positions",
+                      dir.map(d => s"$d/positions"))
 
   def loadBm25Index(spark: SparkSession, name: String,
                     dir: Option[String] = None): Relevance.Bm25Index =
     Relevance.Bm25Index(
-      loadTable(spark, s"${name}_postings", dir.map(d => s"$d/postings")),
-      loadTable(spark, s"${name}_stats", dir.map(d => s"$d/stats")))
+      loadPlainArtifact(spark, s"${name}_postings",
+                        dir.map(d => s"$d/postings")),
+      loadPlainArtifact(spark, s"${name}_stats", dir.map(d => s"$d/stats")))
 
   // --------------------------------------------------- plain artifacts
 
@@ -562,11 +541,20 @@ object IndexStore {
                                           numBuckets: Int,
                                           keys: Seq[String],
                                           dir: Option[String] = None): Unit =
-    writeBucketedTable(df, table, numBuckets, keys, dir)
+    publishTable(df, table, Some((numBuckets, keys)), dir)
 
+  // NOTE (round-18, measured): a size-gated coalesce here (partition
+  // count ∝ file bytes) fixed the manifest-scale task storms (q144
+  // 0.34→0.19 s) but SERIALIZED every compute-heavy consumer of a
+  // loaded index — coalesce adds no shuffle boundary, so the whole
+  // downstream row-local pipeline fused into its 1–2 tasks (q188
+  // 0.70→1.20 s, q190 0.94→2.71 s, q76/q151 ~1.8× worse). Reverted;
+  // the KB-scale 32-task reads are a benign local-mode artifact that
+  // disappears at scale (real indexes fill their buckets).
+  /** Load any versioned table, index tables included. */
   private[graft] def loadPlainArtifact(spark: SparkSession, table: String,
                                        dir: Option[String] = None): DataFrame =
-    loadTable(spark, table, dir)
+    spark.table(resolve(spark, table, dir))
 
   /** Drop ONE versioned table (all versions + base location). */
   private[graft] def dropArtifact(spark: SparkSession,

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.SavedOnce
 import graft.sources.Tables
 
 /** Relational operator coverage over the TPC-H-ish tables (SURVEY.md §2.5:
@@ -380,9 +381,7 @@ object RelationalQueries {
     * streaming sinks (a timed pass would measure a parquet re-read).
     */
   def q258StreamedViewRoll(spark: SparkSession, dir: String): DataFrame = {
-    val outDir = q258Saved.getOrElseUpdate(dir, {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_q258_").toString
+    val outDir = SavedOnce.scratch("q258", dir) { base =>
       val in = s"$base/in"
       val o = Tables.orders(spark, dir)
       val l = Tables.lineitem(spark, dir)
@@ -406,14 +405,13 @@ object RelationalQueries {
         stream, o, s"$base/out", s"$base/ckpt")
       try q.processAllAvailable() finally q.stop()
       s"$base/out/v2"
-    })
+    }
     spark.read.parquet(outDir)
       .select(col("o_orderkey"), col("o_custkey"),
               col("o_orderpriority"), col("n_items"),
               col("revenue").cast("string").as("revenue"))
       .orderBy("o_orderkey")
   }
-  private val q258Saved = new graft.SavedOnce[String, String]
 
   /** Streamed RETRACTABLE view maintenance — the fourth leg of the
     * family matrix (batch/stream × insert-only/retract): q257's CDC
@@ -428,9 +426,7 @@ object RelationalQueries {
     */
   def q259StreamedRetractRoll(spark: SparkSession,
                               dir: String): DataFrame = {
-    val outDir = q259Saved.getOrElseUpdate(dir, {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_q259_").toString
+    val outDir = SavedOnce.scratch("q259", dir) { base =>
       val in = s"$base/in"
       val o = Tables.orders(spark, dir)
       val l = Tables.lineitem(spark, dir)
@@ -450,14 +446,13 @@ object RelationalQueries {
         ViewMaintenance.orderRevenueRetractRoll)
       try q.processAllAvailable() finally q.stop()
       s"$base/out/v2"
-    })
+    }
     spark.read.parquet(outDir)
       .select(col("o_orderkey"), col("o_custkey"),
               col("o_orderpriority"), col("n_items"),
               col("revenue").cast("string").as("revenue"))
       .orderBy("o_orderkey")
   }
-  private val q259Saved = new graft.SavedOnce[String, String]
 
   /** The portable 60-bit md5 key hash (the repo-wide oracle hash
     * convention) reduced to a `m`-bit-array slot — a 1-hash Bloom
@@ -680,12 +675,11 @@ object RelationalQueries {
     */
   def q271BucketedViewRoll(spark: SparkSession, dir: String): DataFrame = {
     val (_, deltaOrders, deltaLines) = jvSplit(spark, dir)
-    val name = q271Saved.getOrElseUpdate(dir, {
-      val n = "graft_jv_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+    val name = SavedOnce("jv", dir) { n =>
       graft.llm.IndexStore.saveBucketedArtifact(
         jvSplit(spark, dir)._1, n, numBuckets = 16, Seq("o_orderkey"))
       n
-    })
+    }
     val view = graft.llm.IndexStore.loadPlainArtifact(spark, name)
     ViewMaintenance.orderRevenueRollCoLocated(view, deltaOrders,
                                               deltaLines)
@@ -694,7 +688,6 @@ object RelationalQueries {
               col("revenue").cast("string").as("revenue"))
       .orderBy("o_orderkey")
   }
-  private val q271Saved = new graft.SavedOnce[String, String]
 
   /** Broadcast a key-only set ONLY when a count says it fits — the
     * erasure-cascade guard (same idea as `Dedup.maxBucket`): an RTBF

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.SavedOnce
 import graft.sources.Tables
 
 /** Time-series / semi-structured / multidimensional query coverage over
@@ -505,9 +506,7 @@ object TimeSeriesQueries {
     * bench like the other streaming queries.
     */
   def q251StreamingDecay(spark: SparkSession, dir: String): DataFrame = {
-    val outDir = q251Saved.getOrElseUpdate(dir, {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_q251_").toString
+    val outDir = SavedOnce.scratch("q251", dir) { base =>
       val in = s"$base/in"
       graft.streaming.EventStreams.stageMicroBatchFiles(
         Tables.events(spark, dir).select("ts", "event_type", "user_id"),
@@ -522,7 +521,7 @@ object TimeSeriesQueries {
         stream, refDay, s"$base/out", s"$base/ckpt")
       try q.processAllAvailable() finally q.stop()
       s"$base/out"
-    })
+    }
     val merged = spark.read.parquet(outDir)
       .groupBy("event_type", "user_id")
       .agg(sum("score").as("score"))
@@ -534,7 +533,6 @@ object TimeSeriesQueries {
       .select("event_type", "rank", "user_id", "score")
       .orderBy("event_type", "rank")
   }
-  private val q251Saved = new graft.SavedOnce[String, String]
 
   /** Right-to-be-forgotten for the STREAMING estate ([[graft.streaming
     * .EventStreams.eraseFromSink]]): q251's idempotent `batch_id=`
@@ -552,9 +550,7 @@ object TimeSeriesQueries {
     * scores were computed against.
     */
   def q279SinkErasure(spark: SparkSession, dir: String): DataFrame = {
-    val outDir = q279Saved.getOrElseUpdate(dir, {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_q279_").toString
+    val outDir = SavedOnce.scratch("q279", dir) { base =>
       val in = s"$base/in"
       graft.streaming.EventStreams.stageMicroBatchFiles(
         Tables.events(spark, dir).select("ts", "event_type", "user_id"),
@@ -574,7 +570,7 @@ object TimeSeriesQueries {
       graft.streaming.EventStreams.eraseFromSink(
         spark, s"$base/out", erase, "user_id")
       s"$base/out"
-    })
+    }
     val merged = spark.read.parquet(outDir)
       .groupBy("event_type", "user_id")
       .agg(sum("score").as("score"))
@@ -586,7 +582,6 @@ object TimeSeriesQueries {
       .select("event_type", "rank", "user_id", "score")
       .orderBy("event_type", "rank")
   }
-  private val q279Saved = new graft.SavedOnce[String, String]
 
   /** Session-scoped funnel — the product-analytics twin of the
     * event-level funnel (q106): how many SESSIONS (q29's gap-30-min
@@ -679,11 +674,7 @@ object TimeSeriesQueries {
     */
   private def streamingFunnelOut(spark: SparkSession, dir: String,
                                  useTws: Boolean): String = {
-    val saved = if (useTws) q290Saved else q253Saved
-    saved.getOrElseUpdate(dir, {
-      val base = java.nio.file.Files
-        .createTempDirectory(if (useTws) "graft_q290_" else "graft_q253_")
-        .toString
+    SavedOnce.scratch(if (useTws) "q290" else "q253", dir) { base =>
       val in = s"$base/in"
       val e = Tables.events(spark, dir)
         .select(col("ts"), col("event_type"), col("user_id"),
@@ -730,7 +721,7 @@ object TimeSeriesQueries {
               else writer.start()
       try q.processAllAvailable() finally q.stop()
       out
-    })
+    }
   }
 
   /** Re-aggregate a landed (user_id, stage) sink to the funnel report
@@ -751,8 +742,6 @@ object TimeSeriesQueries {
               expr("n_view_click * 1000000 DIV n_sessions")
                 .as("vc_ppm"),
               expr("n_full * 1000000 DIV n_sessions").as("full_ppm"))
-  private val q253Saved = new graft.SavedOnce[String, String]
-  private val q290Saved = new graft.SavedOnce[String, String]
 
   /** Decayed-score STORE with a daily roll — the third leg of the
     * trending family (batch q243, streamed partials q251): the
@@ -769,8 +758,7 @@ object TimeSeriesQueries {
     * three.
     */
   def q255DecayRoll(spark: SparkSession, dir: String): DataFrame = {
-    val name = q255Saved.getOrElseUpdate(dir, {
-      val n = "graft_decay_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+    val name = SavedOnce("decay", dir) { n =>
       val ev = Tables.events(spark, dir)
         .select(col("event_type"), col("user_id"),
                 expr("unix_timestamp(ts) div 86400").as("day"))
@@ -789,7 +777,7 @@ object TimeSeriesQueries {
         graft.llm.IndexStore.loadPlainArtifact(spark, n)
           .unionByName(delta), n)
       n
-    })
+    }
     val daily = graft.llm.IndexStore.loadPlainArtifact(spark, name)
     // resolve the reference day first (a 1-row lookup) so the horizon
     // cut is a LITERAL scan predicate — PushedFilters on the store
@@ -809,7 +797,6 @@ object TimeSeriesQueries {
       .select("event_type", "rank", "user_id", "score")
       .orderBy("event_type", "rank")
   }
-  private val q255Saved = new graft.SavedOnce[String, String]
 
   /** Cascading rollup maintenance (hour → day): the day grain is built
     * ONLY from hourly partials, never from raw events — the aggregate-
@@ -1044,9 +1031,7 @@ object TimeSeriesQueries {
   }
 
   def q264StreamOuterJoin(spark: SparkSession, dir: String): DataFrame = {
-    val outDir = q264Saved.getOrElseUpdate(dir, {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_q264_").toString
+    val outDir = SavedOnce.scratch("q264", dir) { base =>
       val stream = stagedDailyEvents(spark, dir, s"$base/in")
       val joined = graft.streaming.EventStreams.streamStreamLeftJoin(
         stream.filter(col("event_type") === "signup"),
@@ -1055,7 +1040,7 @@ object TimeSeriesQueries {
         joined, s"$base/out", s"$base/ckpt")
       try q.processAllAvailable() finally q.stop()
       s"$base/out"
-    })
+    }
     // finalization cutoff: only signups whose outer verdict the
     // watermark has sealed (2 h ≥ window + lateness before max ts)
     val mx = Tables.events(spark, dir).agg(max("ts")).head.getTimestamp(0)
@@ -1068,7 +1053,6 @@ object TimeSeriesQueries {
                col("purchase_ts").asc_nulls_first,
                col("p_milli").asc_nulls_first)
   }
-  private val q264Saved = new graft.SavedOnce[String, String]
 
   /** Native `session_window` streaming aggregation ([[graft.streaming
     * .EventStreams.sessionWindowCounts]]) over the staged daily events
@@ -1082,22 +1066,19 @@ object TimeSeriesQueries {
     * from the bench like the other streaming sinks.
     */
   def q265SessionWindow(spark: SparkSession, dir: String): DataFrame = {
-    val outDir = q265Saved.getOrElseUpdate(dir, {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_q265_").toString
+    val outDir = SavedOnce.scratch("q265", dir) { base =>
       val stream = stagedDailyEvents(spark, dir, s"$base/in")
       val q = graft.streaming.EventStreams.idempotentParquetSink(
         graft.streaming.EventStreams.sessionWindowCounts(stream),
         s"$base/out", s"$base/ckpt")
       try q.processAllAvailable() finally q.stop()
       s"$base/out"
-    })
+    }
     spark.read.parquet(outDir)
       .filter(col("user_id") =!= 999999999L)
       .select("user_id", "s_start", "s_end", "n", "v_milli")
       .orderBy("user_id", "s_start")
   }
-  private val q265Saved = new graft.SavedOnce[String, String]
 
   /** Streamed cascade-rollup maintenance ([[graft.streaming
     * .EventStreams.cascadeSink]]): the events table arrives as one
@@ -1111,9 +1092,7 @@ object TimeSeriesQueries {
     * the bench like the other streaming sinks.
     */
   def q268StreamedCascade(spark: SparkSession, dir: String): DataFrame = {
-    val outDir = q268Saved.getOrElseUpdate(dir, {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_q268_").toString
+    val outDir = SavedOnce.scratch("q268", dir) { base =>
       val in = s"$base/in"
       val ev = Tables.events(spark, dir)
         .select(col("ts"), col("event_type"), col("value"),
@@ -1133,12 +1112,11 @@ object TimeSeriesQueries {
         stream, s"$base/out", s"$base/ckpt")
       try q.processAllAvailable() finally q.stop()
       s"$base/out/d29"
-    })
+    }
     spark.read.parquet(outDir)
       .select("day", "event_type", "n", "v_milli")
       .orderBy("day", "event_type")
   }
-  private val q268Saved = new graft.SavedOnce[String, String]
 
   /** Retractable cascade roll — corrections flowing through the
     * hour→day grains (the q257 group-structure argument applied to the

@@ -23,3 +23,12 @@ object ListenerBridge {
   def waitUntilEmpty(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 }
+
+/** Shutdown-hook bridge: `ShutdownHookManager` is `private[spark]`.
+  * Dirs registered here are deleted by Spark's temp-dir hook, which runs
+  * after the SparkContext's own stop hook.
+  */
+object ShutdownBridge {
+  def deleteAtExit(dir: java.io.File): Unit =
+    org.apache.spark.util.ShutdownHookManager.registerShutdownDeleteDir(dir)
+}
