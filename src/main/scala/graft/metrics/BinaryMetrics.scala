@@ -1,6 +1,6 @@
 package graft.metrics
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,22 +12,99 @@ import org.apache.spark.sql.functions._
   * Scale notes: confusion/accuracy/F1 are one hash-aggregate shuffle on
   * (label, prediction) — cardinality #classes², trivially safe. ROC/AUC
   * groups by distinct score first (cardinality ≤ #distinct scores, bounded
-  * further by `maxBins` quantile binning at cluster scale), then runs a
-  * window cumulative sum over that aggregated (small) relation — the window
-  * never sees raw rows.
+  * further by `maxBins` quantile binning at cluster scale); the cumulative
+  * sums then run over that aggregated (small) relation, never over raw rows.
+  *
+  * At sf0.1 the evaluators are bound by job latency, not compute, so the
+  * collecting evaluators ([[weightedF1]], [[aucROC]], [[summary]]) collect
+  * the unordered aggregate once and do the ordering and cumulative
+  * arithmetic on the driver, in the same order as the DataFrame plans of
+  * [[confusionMatrix]] and [[rocPoints]] — bit-identical results, fewer
+  * round trips.
   */
 object BinaryMetrics {
+
+  /** (label, prediction) → n, unordered: the aggregate every
+    * confusion-derived metric starts from.
+    */
+  private def confusionCells(preds: Dataset[_], labelCol: String,
+                             predictionCol: String): DataFrame =
+    preds
+      .groupBy(col(labelCol).cast("double").as("label"),
+               col(predictionCol).cast("double").as("prediction"))
+      .agg(count(lit(1)).as("n"))
 
   /** E4 — distributed confusion matrix: the `qnli_test.py:183-193` pattern.
     * Cardinality = #classes², safe at any data scale.
     */
   def confusionMatrix(preds: Dataset[_], labelCol: String = "label",
                       predictionCol: String = "prediction"): DataFrame =
-    preds
-      .groupBy(col(labelCol).cast("double").as("label"),
-               col(predictionCol).cast("double").as("prediction"))
-      .agg(count(lit(1)).as("n"))
+    confusionCells(preds, labelCol, predictionCol)
       .orderBy("label", "prediction")
+
+  /** The collected confusion aggregate. `cells` holds the non-null
+    * (label, prediction, n) cells in [[confusionMatrix]]'s order (label,
+    * then prediction, ascending); `nullRows` counts the rows whose label or
+    * prediction is null.
+    */
+  private[metrics] final case class Confusion(
+      cells: Seq[(Double, Double, Long)], nullRows: Long) {
+
+    /** Hits over all rows, null rows counted as misses — bit for bit
+      * [[BinaryMetrics.accuracy]]'s `avg(when(label === prediction, 1.0))`:
+      * a sum of 1.0s is exact, and `avg` divides it by the row count.
+      */
+    def accuracy: Double = {
+      val hits = cells.collect {
+        case (l, p, n) if l == p || (l.isNaN && p.isNaN) => n
+      }.sum
+      hits.toDouble / (cells.map(_._3).sum + nullRows)
+    }
+
+    def weightedF1: Double = {
+      requireNoNulls("weightedF1")
+      val classes = (cells.map(_._1) ++ cells.map(_._2)).distinct
+      val total   = cells.map(_._3).sum.toDouble
+      classes.map { c =>
+        val tp = cells.filter(t => t._1 == c && t._2 == c).map(_._3).sum.toDouble
+        val fp = cells.filter(t => t._1 != c && t._2 == c).map(_._3).sum.toDouble
+        val fn = cells.filter(t => t._1 == c && t._2 != c).map(_._3).sum.toDouble
+        val support   = tp + fn
+        val precision = if (tp + fp == 0) 0.0 else tp / (tp + fp)
+        val recall    = if (tp + fn == 0) 0.0 else tp / (tp + fn)
+        val f1 =
+          if (precision + recall == 0) 0.0
+          else 2 * precision * recall / (precision + recall)
+        f1 * (support / total)
+      }.sum
+    }
+
+    def counts: Map[(Double, Double), Long] = {
+      requireNoNulls("confusion")
+      cells.map { case (l, p, n) => (l, p) -> n }.toMap
+    }
+
+    private def requireNoNulls(what: String): Unit =
+      require(nullRows == 0,
+              s"$what: $nullRows rows have a null label or prediction")
+  }
+
+  /** One collect of the unordered [[confusionCells]]; the ≤ #classes² rows
+    * are put in `orderBy("label", "prediction")` order on the driver (Spark
+    * orders doubles totally, NaN last, as `TotalOrdering` does), so no
+    * range-partition sampling job or second exchange runs.
+    */
+  private[metrics] def confusion(preds: Dataset[_], labelCol: String,
+                                 predictionCol: String): Confusion = {
+    val (nulls, cells) = confusionCells(preds, labelCol, predictionCol)
+      .collect().toSeq.partition(r => r.isNullAt(0) || r.isNullAt(1))
+    Confusion(
+      cells.map(r => (r.getDouble(0), r.getDouble(1), r.getLong(2)))
+        .sortBy(t => (t._1, t._2))(
+          Ordering.Tuple2(Ordering.Double.TotalOrdering,
+                          Ordering.Double.TotalOrdering)),
+      nulls.map(_.getLong(2)).sum)
+  }
 
   /** E2/E6 — accuracy as a single global aggregate. */
   def accuracy(preds: Dataset[_], labelCol: String = "label",
@@ -44,25 +121,22 @@ object BinaryMetrics {
     * over a handful of rows.
     */
   def weightedF1(preds: Dataset[_], labelCol: String = "label",
-                 predictionCol: String = "prediction"): Double = {
-    val cm = confusionMatrix(preds, labelCol, predictionCol)
-      .collect()
-      .map(r => (r.getDouble(0), r.getDouble(1), r.getLong(2)))
-    val classes = (cm.map(_._1) ++ cm.map(_._2)).distinct
-    val total   = cm.map(_._3).sum.toDouble
-    classes.map { c =>
-      val tp = cm.filter(t => t._1 == c && t._2 == c).map(_._3).sum.toDouble
-      val fp = cm.filter(t => t._1 != c && t._2 == c).map(_._3).sum.toDouble
-      val fn = cm.filter(t => t._1 == c && t._2 != c).map(_._3).sum.toDouble
-      val support   = tp + fn
-      val precision = if (tp + fp == 0) 0.0 else tp / (tp + fp)
-      val recall    = if (tp + fn == 0) 0.0 else tp / (tp + fn)
-      val f1 =
-        if (precision + recall == 0) 0.0
-        else 2 * precision * recall / (precision + recall)
-      f1 * (support / total)
-    }.sum
-  }
+                 predictionCol: String = "prediction"): Double =
+    confusion(preds, labelCol, predictionCol).weightedF1
+
+  /** The default ROC/AUC is exact up to this many distinct scores. */
+  val AutoExactMaxScores = 10000L
+  /** Quantile bins of the default ROC/AUC above [[AutoExactMaxScores]]. */
+  val AutoBins           = 1000
+
+  private def scoredRows(preds: Dataset[_], labelCol: String,
+                         scoreCol: String): DataFrame =
+    preds.select(
+      col(scoreCol).cast("double").as("score"),
+      col(labelCol).cast("double").as("label"))
+
+  private val pos = sum(when(col("label") === 1.0d, 1L).otherwise(0L)).as("pos")
+  private val neg = sum(when(col("label") === 1.0d, 0L).otherwise(1L)).as("neg")
 
   /** E5 — ROC curve points, DataFrame-native (replaces sklearn `roc_curve`
     * over collected arrays, `sst2_test2.py:127-128`).
@@ -89,15 +163,12 @@ object BinaryMetrics {
     * quantile binning above it — a naive caller with continuous LR
     * scores gets a bounded window WITHOUT opting in, and the unbounded
     * exact mode is an explicit choice, never a scale accident.
+    * [[aucROC]] resolves the same default by exact counting instead: its
+    * bounded grouped collect is the exact curve's input as well.
     */
-  val AutoExactMaxScores = 10000L
-  val AutoBins           = 1000
-
   def rocPoints(preds: Dataset[_], labelCol: String = "label",
                 scoreCol: String = "score", maxBins: Int = -1): DataFrame = {
-    val scored = preds.select(
-      col(scoreCol).cast("double").as("score"),
-      col(labelCol).cast("double").as("label"))
+    val scored = scoredRows(preds, labelCol, scoreCol)
     val bins =
       if (maxBins >= 0) maxBins
       else {
@@ -105,8 +176,6 @@ object BinaryMetrics {
           approx_count_distinct("score")).head().getLong(0)
         if (distinct <= AutoExactMaxScores) 0 else AutoBins
       }
-    val pos = sum(when(col("label") === 1.0d, 1L).otherwise(0L)).as("pos")
-    val neg = sum(when(col("label") === 1.0d, 0L).otherwise(1L)).as("neg")
     val byScore =
       if (bins <= 0) scored.groupBy("score").agg(pos, neg)
       else {
@@ -140,18 +209,64 @@ object BinaryMetrics {
       .orderBy(desc("score"))
   }
 
-  /** E1 — area under the ROC curve by trapezoidal integration of
-    * [[rocPoints]] (the BinaryClassificationMetrics construction: curve
-    * points at each distinct score, origin prepended). Matches
+  /** The exact ROC curve (fpr, tpr) from collected (score, pos, neg) rows,
+    * one per distinct score — [[rocPoints]]' window arithmetic on the
+    * driver: scores descending with the null score last (`desc`'s order;
+    * NaN first, as Spark orders it), `Long` cumulative TP/FP, each divided
+    * by the class total. A single-class input has no curve: the window plan
+    * fails on its zero divisor, and this names the missing class.
+    */
+  private def exactCurve(rows: Seq[Row]): Seq[(Double, Double)] = {
+    val (nulls, scored) = rows.partition(_.isNullAt(0))
+    val ordered = scored.sortBy(_.getDouble(0))(
+      Ordering.Double.TotalOrdering.reverse) ++ nulls
+    val totP = ordered.map(_.getLong(1)).sum
+    val totN = ordered.map(_.getLong(2)).sum
+    require(totP > 0, "aucROC needs both classes: no positive (label 1.0) rows")
+    require(totN > 0, "aucROC needs both classes: no negative rows")
+    ordered
+      .scanLeft((0L, 0L)) { case ((tp, fp), r) =>
+        (tp + r.getLong(1), fp + r.getLong(2))
+      }
+      .tail
+      .map { case (tp, fp) => (fp.toDouble / totN.toDouble,
+                               tp.toDouble / totP.toDouble) }
+  }
+
+  /** E1 — area under the ROC curve by trapezoidal integration of the ROC
+    * curve (the BinaryClassificationMetrics construction: curve points at
+    * each distinct score, origin prepended). Matches
     * `BinaryClassificationEvaluator` when the score column is
-    * P(class=1) — exact-equality tested in MetricsSpec.
+    * P(class=1) — tested against it in BinaryMetricsSpec.
+    *
+    * The default (`maxBins = -1`) runs ONE bounded grouped collect:
+    * `groupBy(score)` limited to [[AutoExactMaxScores]] + 1 rows. At or
+    * under the bound that is the exact per-score count, and the curve is
+    * built on the driver ([[exactCurve]]); over it, the AUC comes from the
+    * [[AutoBins]]-bin [[rocPoints]] plan. The bound is exact counting, not
+    * an `approx_count_distinct` estimate, and keeps the driver's share at
+    * ≤ 10K rows at any data scale. `maxBins = 0` collects every distinct
+    * score; `maxBins > 0` integrates the binned [[rocPoints]].
     */
   def aucROC(preds: Dataset[_], labelCol: String = "label",
              scoreCol: String = "score", maxBins: Int = -1): Double = {
-    val pts = rocPoints(preds, labelCol, scoreCol, maxBins)
-      .select("fpr", "tpr").collect()
-      .map(r => (r.getDouble(0), r.getDouble(1)))
-    val curve = ((0.0, 0.0) +: pts.toSeq).toList
+    def binnedCurve(bins: Int): Seq[(Double, Double)] =
+      rocPoints(preds, labelCol, scoreCol, bins)
+        .select("fpr", "tpr").collect()
+        .map(r => (r.getDouble(0), r.getDouble(1))).toSeq
+    val pts =
+      if (maxBins > 0) binnedCurve(maxBins)
+      else {
+        val byScore = scoredRows(preds, labelCol, scoreCol)
+          .groupBy("score").agg(pos, neg)
+        if (maxBins == 0) exactCurve(byScore.collect().toSeq)
+        else {
+          val rows = byScore.limit(AutoExactMaxScores.toInt + 1).collect()
+          if (rows.length > AutoExactMaxScores) binnedCurve(AutoBins)
+          else exactCurve(rows.toSeq)
+        }
+      }
+    val curve = ((0.0, 0.0) +: pts).toList
     curve.zip(curve.tail).map { case ((x0, y0), (x1, y1)) =>
       (x1 - x0) * (y1 + y0) / 2.0
     }.sum
@@ -161,7 +276,8 @@ object BinaryMetrics {
     * for the reference's recompute-per-evaluator inefficiency (it re-ran
     * the whole transform chain 3×, `sst2_test2.py:80-86`; SURVEY §3.2).
     * Callers hand in scored predictions once; the input is persisted for
-    * the duration of the four aggregates and unpersisted before return.
+    * two collects — the [[confusion]] aggregate (accuracy, weighted F1 and
+    * the confusion map) and [[aucROC]]'s — and unpersisted before return.
     */
   case class MetricsSummary(accuracy: Double, f1: Double, auc: Double,
                             confusion: Map[(Double, Double), Long])
@@ -171,12 +287,9 @@ object BinaryMetrics {
               scoreCol: String = "score"): MetricsSummary = {
     val cached = preds.persist()
     try {
-      MetricsSummary(
-        accuracy(cached, labelCol, predictionCol),
-        weightedF1(cached, labelCol, predictionCol),
-        aucROC(cached, labelCol, scoreCol),
-        confusionMatrix(cached, labelCol, predictionCol).collect()
-          .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getLong(2)).toMap)
+      val cm = confusion(cached, labelCol, predictionCol)
+      MetricsSummary(cm.accuracy, cm.weightedF1,
+                     aucROC(cached, labelCol, scoreCol), cm.counts)
     } finally { cached.unpersist(); () }
   }
 

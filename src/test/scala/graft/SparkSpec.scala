@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.ShutdownBridge
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -40,6 +41,10 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     super.afterAll()
   }
 
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  /** A fresh scratch dir, deleted at JVM exit. */
+  def tmpDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    ShutdownBridge.deleteAtExit(dir)
+    dir.toString
+  }
 }

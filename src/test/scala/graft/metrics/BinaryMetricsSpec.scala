@@ -5,8 +5,10 @@ import org.apache.spark.ml.evaluation.{
   BinaryClassificationEvaluator, MulticlassClassificationEvaluator
 }
 import org.apache.spark.ml.linalg.Vectors
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ListenerBridge
 
 /** Distributed metrics must agree EXACTLY with the MLlib evaluators the
   * reference calls (E1–E3) — same fixture, same numbers.
@@ -57,6 +59,8 @@ class BinaryMetricsSpec extends SparkSpec {
     assert(s.f1 == BinaryMetrics.weightedF1(df))
     assert(s.auc == BinaryMetrics.aucROC(df))
     assert(s.confusion.values.sum == 40L)
+    assert(s.confusion == BinaryMetrics.confusionMatrix(df).collect()
+      .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getLong(2)).toMap)
   }
 
   test("E4: confusion matrix counts are exact") {
@@ -206,6 +210,137 @@ class BinaryMetricsSpec extends SparkSpec {
     assert(c(8L) == ((3L, 0.85, round4(2.0 / 3))))
     assert(c(9L) == ((1L, 1.0, 1.0)))
     assert(c.values.map(_._1).sum == 7L)
+  }
+
+  /** Tied scores, a -0.0/0.0 pair, NaN and a null score: every ordering
+    * corner of the score-grouped curve. The NaN and null groups are
+    * one-class, so where they sit in the curve moves the area.
+    */
+  private def tiedFixture: DataFrame = {
+    import spark.implicits._
+    Seq[(Double, java.lang.Double)](
+      (1.0, 0.9), (0.0, 0.9), (1.0, 0.9), (1.0, 0.5), (0.0, 0.5),
+      (1.0, 0.0), (0.0, -0.0), (0.0, 0.0), (1.0, -0.0), (0.0, 0.1),
+      (1.0, Double.NaN), (1.0, null), (0.0, 0.2))
+      .toDF("label", "score")
+  }
+
+  private def singleScoreFixture: DataFrame = {
+    import spark.implicits._
+    Seq((1.0, 0.5), (0.0, 0.5), (0.0, 0.5)).toDF("label", "score")
+  }
+
+  /** The trapezoid over the window plan's exact curve. */
+  private def windowAuc(df: DataFrame): Double = {
+    val pts = BinaryMetrics.rocPoints(df, maxBins = 0)
+      .select("fpr", "tpr").collect()
+      .map(r => (r.getDouble(0), r.getDouble(1)))
+    val curve = ((0.0, 0.0) +: pts.toSeq).toList
+    curve.zip(curve.tail).map { case ((x0, y0), (x1, y1)) =>
+      (x1 - x0) * (y1 + y0) / 2.0
+    }.sum
+  }
+
+  test("E1: driver-built aucROC == the trapezoid over rocPoints' exact " +
+       "window curve (default and maxBins = 0)") {
+    for ((name, df) <- Seq("40-row" -> fixture, "tied" -> tiedFixture,
+                           "single-score" -> singleScoreFixture)) {
+      val expected = windowAuc(df)
+      assert(BinaryMetrics.aucROC(df) == expected, name)
+      assert(BinaryMetrics.aucROC(df, maxBins = 0) == expected, name)
+    }
+    assert(BinaryMetrics.aucROC(singleScoreFixture) == 0.5)
+  }
+
+  test("E1: a single-class input is an error naming the missing class") {
+    import spark.implicits._
+    val allPos = Seq((1.0, 0.2), (1.0, 0.7)).toDF("label", "score")
+    val allNeg = Seq((0.0, 0.2), (0.0, 0.7)).toDF("label", "score")
+    for (bins <- Seq(-1, 0)) {
+      val p = intercept[IllegalArgumentException](
+        BinaryMetrics.aucROC(allPos, maxBins = bins))
+      assert(p.getMessage.contains("no negative"), p.getMessage)
+      val n = intercept[IllegalArgumentException](
+        BinaryMetrics.aucROC(allNeg, maxBins = bins))
+      assert(n.getMessage.contains("no positive"), n.getMessage)
+    }
+  }
+
+  test("E3: weightedF1 == the per-class sum over confusionMatrix's " +
+       "ordered rows") {
+    import spark.implicits._
+    def orderedTerms(df: DataFrame): Array[Double] = {
+      val cm = BinaryMetrics.confusionMatrix(df).collect()
+        .map(r => (r.getDouble(0), r.getDouble(1), r.getLong(2)))
+      val classes = (cm.map(_._1) ++ cm.map(_._2)).distinct
+      val total   = cm.map(_._3).sum.toDouble
+      classes.map { c =>
+        val tp = cm.filter(t => t._1 == c && t._2 == c).map(_._3).sum.toDouble
+        val fp = cm.filter(t => t._1 != c && t._2 == c).map(_._3).sum.toDouble
+        val fn = cm.filter(t => t._1 == c && t._2 != c).map(_._3).sum.toDouble
+        val precision = if (tp + fp == 0) 0.0 else tp / (tp + fp)
+        val recall    = if (tp + fn == 0) 0.0 else tp / (tp + fn)
+        val f1 =
+          if (precision + recall == 0) 0.0
+          else 2 * precision * recall / (precision + recall)
+        f1 * ((tp + fn) / total)
+      }
+    }
+    assert(BinaryMetrics.weightedF1(fixture) == orderedTerms(fixture).sum)
+    val fourClass = Seq(
+      (2.0, 3.0), (3.0, 1.0), (1.0, 0.0), (2.0, 3.0), (0.0, 0.0), (3.0, 0.0),
+      (1.0, 1.0), (3.0, 0.0), (0.0, 3.0), (3.0, 3.0), (3.0, 2.0), (1.0, 1.0))
+      .toDF("label", "prediction")
+    val terms = orderedTerms(fourClass)
+    // these four terms sum to another double in reverse order, so the
+    // fixture pins the per-class summation order
+    assert(terms.reverse.sum != terms.sum)
+    assert(BinaryMetrics.weightedF1(fourClass) == terms.sum)
+  }
+
+  test("confusion aggregate: null label or prediction rows count as " +
+       "accuracy misses, bit for bit") {
+    import spark.implicits._
+    val df = Seq[(java.lang.Double, java.lang.Double)](
+      (1.0, 1.0), (1.0, 0.0), (0.0, 0.0), (null, 1.0), (0.0, null),
+      (1.0, 1.0), (-0.0, 0.0))
+      .toDF("label", "prediction")
+    val cm = BinaryMetrics.confusion(df, "label", "prediction")
+    assert(cm.nullRows == 2L)
+    assert(cm.accuracy == BinaryMetrics.accuracy(df))
+    assert(intercept[IllegalArgumentException](cm.weightedF1)
+      .getMessage.contains("null label or prediction"))
+  }
+
+  /** Jobs one evaluator call launches, counted with a listener drained
+    * before and after.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    ListenerBridge.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    try { body; ListenerBridge.waitUntilEmpty(sc) }
+    finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("aucROC, weightedF1 and summary run one collect's jobs per " +
+       "aggregate on the 40-row fixture") {
+    val df = fixture.persist()
+    try {
+      df.count()
+      assert(jobsOf(BinaryMetrics.aucROC(df)) == 2)
+      assert(jobsOf(BinaryMetrics.aucROC(df, maxBins = 0)) == 2)
+      assert(jobsOf(BinaryMetrics.weightedF1(df)) == 2)
+      // the confusion aggregate's collect plus aucROC's
+      assert(jobsOf(BinaryMetrics.summary(df)) == 4)
+    } finally { df.unpersist(); () }
   }
 
   private def round4(x: Double): Double =

@@ -130,8 +130,7 @@ class StatsCatalogSpec extends SparkSpec {
       .filter(col("value").isNotNull)
       .select(floor(col("value")).cast("long").as("vk"),
               col("event_id"))
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_jehist_").toString
+    val base = tmpDir("graft_jehist_")
     vk.write.mode("overwrite").parquet(s"$base/events_vk.parquet")
     val t = StatsCatalog.ensureTable(spark, base, "events_vk")
     StatsCatalog.publish(spark, t, Seq("vk"))
@@ -183,8 +182,7 @@ class StatsCatalogSpec extends SparkSpec {
        "Instant/LocalDate (java8API on) and Timestamp/Date/BigDecimal " +
        "land as identical catalog strings") {
     import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_sc_").toString
+    val base = tmpDir("graft_sc_")
     Seq(("2024-01-02 03:04:05", "2024-01-02", "1.23"),
         ("2024-06-07 08:09:10", "2024-06-07", "45.67"))
       .toDF("ts_s", "d_s", "m_s")

@@ -191,8 +191,7 @@ class EventStreamsSpec extends SparkSpec {
     import spark.implicits._
     val input = MemoryStream[(Timestamp, String)]
     val docs = input.toDF().toDF("ts", "text")
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_sds_").toString
+    val base = tmpDir("graft_sds_")
     val q = streamingDedupSink(docs, "ts", "text", "1 hour",
                                s"$base/out", s"$base/ckpt")
     try {
@@ -230,8 +229,7 @@ class EventStreamsSpec extends SparkSpec {
       Similarity.pqIndex(corpus, nSub = 4, nCodes = 4, seed = 42L),
       "graft_test_pq_sink")
     val input = MemoryStream[(Long, Seq[Float])]
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_pqs_").toString
+    val base = tmpDir("graft_pqs_")
     val q = pqEncodeSink(input.toDF().toDF("vec_id", "embedding"),
                          "graft_test_pq_sink",
                          s"$base/out", s"$base/ckpt")
@@ -264,8 +262,7 @@ class EventStreamsSpec extends SparkSpec {
     val docs = Seq((1L, "alpha beta alpha"), (2L, "beta gamma"),
                    (3L, "alpha"), (4L, "gamma gamma beta"))
     val input = MemoryStream[(Long, String)]
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_tcs_").toString
+    val base = tmpDir("graft_tcs_")
     val q = tokenCountSink(input.toDF().toDF("doc_id", "text"), "text",
                            s"$base/out", s"$base/ckpt")
     try {

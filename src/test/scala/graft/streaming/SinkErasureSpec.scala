@@ -29,8 +29,7 @@ class SinkErasureSpec extends SparkSpec {
   test("eraseFromSink rewrites ONLY touched partitions, scrubs every " +
        "erased key, and leaves untouched partitions byte-identical") {
     import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_se_").toString
+    val base = tmpDir("graft_se_")
     val out = s"$base/out"
     def batch(rows: (String, Long, Long)*) =
       rows.toDF("event_type", "user_id", "score")
@@ -74,8 +73,7 @@ class SinkErasureSpec extends SparkSpec {
        "row is ever lost, staging dirs are invisible to plain reads, " +
        "and a re-run completes the erasure") {
     import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_sec_").toString
+    val base = tmpDir("graft_sec_")
     val out = s"$base/out"
     def batch(rows: (String, Long, Long)*) =
       rows.toDF("event_type", "user_id", "score")
