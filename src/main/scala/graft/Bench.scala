@@ -147,7 +147,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.local(cpus, "graft-bench")
+    val parent = Sessions.local(cpus, "graft-bench")
 
     val subset = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
@@ -170,30 +170,6 @@ object Bench {
       }
       catch { case _: Throwable => (Map.empty[String, Double], None) }
 
-    def run(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-
-    /** Fresh warmup + 3 timed passes → (min, spread, allOk). */
-    def time(name: String): (Double, Double, Boolean) = {
-      try run(name)
-      catch { case _: Throwable => () }
-      val passes = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { run(name); true }
-          catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] $name failed: ${e.getMessage}")
-              false
-          }
-        ((System.nanoTime() - t0) / 1e9, ok)
-      }
-      val times = passes.map(_._1).sorted
-      (times.head, times.last / math.max(times.head, 1e-9),
-       passes.forall(_._2))
-    }
-
     // Warehouse hygiene FIRST on full runs: round-14's judge measured
     // dead-estate accumulation (271 tables / 530 version dirs) inflating
     // the persisted-index queries to a 1.43× median vs 1.19× elsewhere
@@ -212,7 +188,7 @@ object Bench {
     // alone.
     if (subset.isEmpty &&
         !sys.env.get("SPARK_GRAFT_BENCH_NOVACUUM").exists(_ == "1")) {
-      val rep = graft.llm.IndexStore.vacuum(spark)
+      val rep = graft.llm.IndexStore.vacuum(parent)
       System.err.println(s"[bench] ${rep.summary}")
     }
 
@@ -224,103 +200,121 @@ object Bench {
     // must time the same plans the suite did). The suite's path-based
     // reads carry no catalog stats, so for them this changes the stats
     // PROPAGATION visitor, not scan estimates; catalog-table reads
-    // (persisted indexes, anchor twins) see real row counts. Control
-    // regime via SPARK_GRAFT_BENCH_NOCBO=1.
-    val cboRegime = !sys.env.get("SPARK_GRAFT_BENCH_NOCBO").exists(_ == "1")
-    if (cboRegime) {
-      val n = graft.tools.CboAnchors.operatingRegime(spark, sfDir)
-      System.err.println("[bench] cbo regime ON: statistics published " +
-        s"on $n anchor catalog tables")
-    }
+    // (persisted indexes, anchor twins) see real row counts.
+    graft.tools.CboAnchors.operatingRegime(parent, sfDir) { spark =>
+      def run(name: String): Unit =
+        SparkEntry.queries(name)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
 
-    // Host-speed probe FIRST (before any query warms caches), so every
-    // artifact carries a same-instant CPU reference for cross-round
-    // normalization.
-    val calibration = calibrate(spark)
-    // host-speed ratio vs the adjudication baseline (1.0 when either
-    // side lacks the probe — pre-r15 artifacts — leaving the raw test)
-    val calRatio = baseCal.filter(_ > 0).map(calibration / _).getOrElse(1.0)
-    System.err.println(f"[bench] calibration: $calibration%.3f s" +
-      baseCal.fold("")(b => f" (baseline $b%.3f s, ratio $calRatio%.3f)"))
-
-    val inSuite: Seq[(String, (Double, Double, Boolean))] =
-      names.map(n => n -> time(n))
-
-    // Second probe AFTER the suite: the round-16 first pass caught a
-    // minutes-scale host burst with the pre-probe (1.119 s) while the
-    // suite itself ran at normal speed — a single instant can misread
-    // a 25-minute run. min(pre, post) is the better host-speed
-    // estimate (slowness is one-sided noise, same argument as
-    // min-of-3 pass timing) and is what the riser threshold and the
-    // published "calibration" field use; both raw probes are
-    // published as diagnostics.
-    val calibrationPost = calibrate(spark)
-    val calBest = math.min(calibration, calibrationPost)
-    val calRatioBest =
-      baseCal.filter(_ > 0).map(calBest / _).getOrElse(1.0)
-    System.err.println(f"[bench] calibration post-suite: " +
-      f"$calibrationPost%.3f s (best $calBest%.3f, " +
-      f"ratio $calRatioBest%.3f)")
-
-    // Auto-adjudication: solo-rerun in-suite risers after the suite is
-    // done, splice the better minimum, and mark the query.
-    val adjudicate = subset.isEmpty &&
-      !sys.env.get("SPARK_GRAFT_BENCH_NOADJ").exists(_ == "1") &&
-      baseline.nonEmpty
-    val curMins = inSuite.map { case (n, (t, _, _)) => n -> t }.toMap
-    val toRerun =
-      if (adjudicate) risers(baseline, curMins, calRatio = calRatioBest)
-      else Seq.empty
-    val rerunResults: Map[String, (Double, Double, Boolean)] =
-      toRerun.map { n =>
-        System.err.println(s"[bench] re-adjudicating $n: " +
-          f"${curMins(n)}%.3f s vs baseline ${baseline(n)}%.3f s")
-        n -> time(n)
-      }.toMap
-
-    val results: Seq[(String, Double, Double, Boolean)] = inSuite.map {
-      case (name, (t, spread, ok)) =>
-        rerunResults.get(name) match {
-          case Some((rt, rspread, rok)) if rt < t =>
-            (name, rt, rspread, ok && rok)
-          case Some((_, _, rok)) => (name, t, spread, ok && rok)
-          case None => (name, t, spread, ok)
+      /** Fresh warmup + 3 timed passes → (min, spread, allOk). */
+      def time(name: String): (Double, Double, Boolean) = {
+        try run(name)
+        catch { case _: Throwable => () }
+        val passes = (1 to 3).map { _ =>
+          val t0 = System.nanoTime()
+          val ok =
+            try { run(name); true }
+            catch {
+              case e: Throwable =>
+                System.err.println(s"[bench] $name failed: ${e.getMessage}")
+                false
+            }
+          ((System.nanoTime() - t0) / 1e9, ok)
         }
-    }
+        val times = passes.map(_._1).sorted
+        (times.head, times.last / math.max(times.head, 1e-9),
+         passes.forall(_._2))
+      }
 
-    val qs = results
-      .map { case (k, v, _, _) => "\"" + k + "\":" + f"$v%.4f" }
-      .mkString("{", ",", "}")
-    val spreads = results
-      .map { case (k, _, s, _) => "\"" + k + "\":" + f"$s%.3f" }
-      .mkString("{", ",", "}")
-    val oks = results
-      .map { case (k, _, _, ok) => "\"" + k + "\":" + ok }
-      .mkString("{", ",", "}")
-    // original in-suite minimum of every spliced query, so the artifact
-    // records both what was measured and what was corrected
-    val readj = toRerun
-      .map(k => "\"" + k + "\":" + f"${curMins(k)}%.4f")
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    // STDOUT gets the compact contract line only (metric/value/unit/
-    // calibration/queries/sf): the round-16 artifact was lost to the
-    // driver's tail-capture truncating the full line once the ok/
-    // spread/readjudicated diagnostic maps pushed it past ~20 KB — those
-    // maps now live ONLY in the file artifact (round-18 hardening; the
-    // file is also what adjudication parses, so nothing is lost).
-    val compactLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","calibration":${f"$calBest%.4f"},"cbo":$cboRegime,"queries":$qs,"sf":"$sfDir"}"""
-    val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","calibration":${f"$calBest%.4f"},"calibration_pre":${f"$calibration%.4f"},"calibration_post":${f"$calibrationPost%.4f"},"cbo":$cboRegime,"queries":$qs,"spread":$spreads,"ok":$oks,"readjudicated":$readj,"sf":"$sfDir"}"""
-    println(compactLine)
-    // A diagnostic subset run must not clobber the standing full
-    // artifact (the previous run's bench_out.json IS the next run's
-    // adjudication baseline).
-    val outFile = if (subset.isEmpty) "bench_out.json"
-                  else "bench_subset.json"
-    try Files.writeString(Paths.get(outFile), fullLine)
-    catch { case _: Throwable => () }
-    spark.stop()
+      // Host-speed probe FIRST (before any query warms caches), so every
+      // artifact carries a same-instant CPU reference for cross-round
+      // normalization.
+      val calibration = calibrate(spark)
+      // host-speed ratio vs the adjudication baseline (1.0 when either
+      // side lacks the probe — pre-r15 artifacts — leaving the raw test)
+      val calRatio = baseCal.filter(_ > 0).map(calibration / _).getOrElse(1.0)
+      System.err.println(f"[bench] calibration: $calibration%.3f s" +
+        baseCal.fold("")(b => f" (baseline $b%.3f s, ratio $calRatio%.3f)"))
+
+      val inSuite: Seq[(String, (Double, Double, Boolean))] =
+        names.map(n => n -> time(n))
+
+      // Second probe AFTER the suite: the round-16 first pass caught a
+      // minutes-scale host burst with the pre-probe (1.119 s) while the
+      // suite itself ran at normal speed — a single instant can misread
+      // a 25-minute run. min(pre, post) is the better host-speed
+      // estimate (slowness is one-sided noise, same argument as
+      // min-of-3 pass timing) and is what the riser threshold and the
+      // published "calibration" field use; both raw probes are
+      // published as diagnostics.
+      val calibrationPost = calibrate(spark)
+      val calBest = math.min(calibration, calibrationPost)
+      val calRatioBest =
+        baseCal.filter(_ > 0).map(calBest / _).getOrElse(1.0)
+      System.err.println(f"[bench] calibration post-suite: " +
+        f"$calibrationPost%.3f s (best $calBest%.3f, " +
+        f"ratio $calRatioBest%.3f)")
+
+      // Auto-adjudication: solo-rerun in-suite risers after the suite is
+      // done, splice the better minimum, and mark the query.
+      val adjudicate = subset.isEmpty &&
+        !sys.env.get("SPARK_GRAFT_BENCH_NOADJ").exists(_ == "1") &&
+        baseline.nonEmpty
+      val curMins = inSuite.map { case (n, (t, _, _)) => n -> t }.toMap
+      val toRerun =
+        if (adjudicate) risers(baseline, curMins, calRatio = calRatioBest)
+        else Seq.empty
+      val rerunResults: Map[String, (Double, Double, Boolean)] =
+        toRerun.map { n =>
+          System.err.println(s"[bench] re-adjudicating $n: " +
+            f"${curMins(n)}%.3f s vs baseline ${baseline(n)}%.3f s")
+          n -> time(n)
+        }.toMap
+
+      val results: Seq[(String, Double, Double, Boolean)] = inSuite.map {
+        case (name, (t, spread, ok)) =>
+          rerunResults.get(name) match {
+            case Some((rt, rspread, rok)) if rt < t =>
+              (name, rt, rspread, ok && rok)
+            case Some((_, _, rok)) => (name, t, spread, ok && rok)
+            case None => (name, t, spread, ok)
+          }
+      }
+
+      val qs = results
+        .map { case (k, v, _, _) => "\"" + k + "\":" + f"$v%.4f" }
+        .mkString("{", ",", "}")
+      val spreads = results
+        .map { case (k, _, s, _) => "\"" + k + "\":" + f"$s%.3f" }
+        .mkString("{", ",", "}")
+      val oks = results
+        .map { case (k, _, _, ok) => "\"" + k + "\":" + ok }
+        .mkString("{", ",", "}")
+      // original in-suite minimum of every spliced query, so the artifact
+      // records both what was measured and what was corrected
+      val readj = toRerun
+        .map(k => "\"" + k + "\":" + f"${curMins(k)}%.4f")
+        .mkString("{", ",", "}")
+      val total = results.map(_._2).sum
+      // STDOUT gets the compact contract line only (metric/value/unit/
+      // calibration/queries/sf): the round-16 artifact was lost to the
+      // driver's tail-capture truncating the full line once the ok/
+      // spread/readjudicated diagnostic maps pushed it past ~20 KB — those
+      // maps now live ONLY in the file artifact (round-18 hardening; the
+      // file is also what adjudication parses, so nothing is lost).
+      val compactLine =
+        s"""{"metric":"total","value":$total,"unit":"sec","calibration":${f"$calBest%.4f"},"cbo":true,"queries":$qs,"sf":"$sfDir"}"""
+      val fullLine =
+        s"""{"metric":"total","value":$total,"unit":"sec","calibration":${f"$calBest%.4f"},"calibration_pre":${f"$calibration%.4f"},"calibration_post":${f"$calibrationPost%.4f"},"cbo":true,"queries":$qs,"spread":$spreads,"ok":$oks,"readjudicated":$readj,"sf":"$sfDir"}"""
+      println(compactLine)
+      // A diagnostic subset run must not clobber the standing full
+      // artifact (the previous run's bench_out.json IS the next run's
+      // adjudication baseline).
+      val outFile = if (subset.isEmpty) "bench_out.json"
+                    else "bench_subset.json"
+      try Files.writeString(Paths.get(outFile), fullLine)
+      catch { case _: Throwable => () }
+    }
+    parent.stop()
   }
 }

@@ -1,10 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.graftbridge.SessionBridge
 
 /** Single place every entrypoint (Verify / Bench / tests / apps) builds its
   * SparkSession, so semantics (UTC timezone, AQE, shuffle width) never depend
   * on the caller.
+  *
+  * Session conf is written only here: at build, and on the clones that
+  * [[withConf]] hands out. A session in use is never written, so nothing
+  * is ever restored, and a query planned on it from another thread keeps
+  * its conf while a scope runs.
   *
   * Scale notes: `spark.sql.shuffle.partitions` is sized to the local core
   * count here; on a real cluster AQE coalesces/splits post-shuffle partitions
@@ -22,13 +28,13 @@ object Sessions {
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
       // The state-store maintenance interval is pinned JVM-wide by the
-      // FIRST stateful query; a fixture that starts one outside
-      // withRocksDbState's scoped conf would otherwise lock in the 60s
-      // default and the maintenance thread races query teardown
-      // (CANNOT_COMMIT / FileNotFoundException log noise). Set it at
-      // session creation so every entrypoint gets the quiet interval
-      // regardless of which query starts first (SparkSpec does the
-      // same for test JVMs).
+      // FIRST stateful query; at the 60s default the maintenance thread
+      // keeps servicing a stopped bounded query's RocksDB providers and
+      // races its checkpoint teardown (CANNOT_COMMIT /
+      // FileNotFoundException log noise). Maintenance only reclaims
+      // space, so a bounded run never needs it: set it at session
+      // creation so every entrypoint gets the quiet interval regardless
+      // of which query starts first.
       .config("spark.sql.streaming.stateStore.maintenanceInterval", "2h")
       // events.parquet stores TIMESTAMP(NANOS) which Spark 4 rejects by
       // default; read as long and convert in Tables.events.
@@ -48,4 +54,39 @@ object Sessions {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Run `body` on a clone of `spark` with `confs` set on the clone; the
+    * clone is the thread's active session meanwhile. Everything the body
+    * plans or runs on its parameter sees the confs; `spark` itself is
+    * never written. Name the parameter `spark` to shadow the outer
+    * session, so no frame inside the body reaches the parent by accident:
+    * {{{
+    * Sessions.withConf(spark, "spark.sql.shuffle.partitions" -> "4") {
+    *   spark => ...
+    * }
+    * }}}
+    * The clone shares the SparkContext, cache manager and external
+    * catalog, so saved tables, published statistics and checkpoints are
+    * visible to the parent; temp views and streams registered on the
+    * clone are not. A frame built OUTSIDE the body keeps its own
+    * session: rebind it with the Dataset form below.
+    */
+  def withConf[T](spark: SparkSession, confs: (String, String)*)
+                 (body: SparkSession => T): T = {
+    val clone = SessionBridge.cloneSession(spark)
+    confs.foreach { case (k, v) => clone.conf.set(k, v) }
+    SessionBridge.withActive(clone)(body(clone))
+  }
+
+  /** [[withConf]] for a frame built elsewhere: `body` gets `ds`'s plan
+    * rebound onto a configured clone of `ds`'s own session. A stream
+    * fixes its conf when it starts (state store provider, state
+    * partitions), so `withConf(stream, conf) { _.writeStream...start() }`
+    * is the whole scope a stream start needs.
+    */
+  def withConf[A, T](ds: Dataset[A], confs: (String, String)*)
+                    (body: Dataset[A] => T): T =
+    withConf(ds.sparkSession, confs: _*) { clone =>
+      body(SessionBridge.rebind(ds, clone))
+    }
 }

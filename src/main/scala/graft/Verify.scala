@@ -33,27 +33,23 @@ object Verify {
       .foreach(q => System.err.println(s"[verify] unknown query $q"))
     def keep(name: String) = only.isEmpty || only(name)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.local(cpus, "graft-verify")
     // Same standing optimizer posture as Bench (round-16): anchor-table
     // statistics published, cbo + joinReorder on — so the round's
     // correctness artifact itself proves every query hash-green UNDER
-    // the operating regime, not beside it. SPARK_GRAFT_VERIFY_NOCBO=1
-    // restores the stats-blind control.
-    if (!sys.env.get("SPARK_GRAFT_VERIFY_NOCBO").exists(_ == "1")) {
-      val n = graft.tools.CboAnchors.operatingRegime(spark, sfDir)
-      System.err.println("[verify] cbo regime ON: statistics published " +
-        s"on $n anchor catalog tables")
-    }
+    // the operating regime, not beside it.
+    val parent = Sessions.local(cpus, "graft-verify")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (keep(name))
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
+    graft.tools.CboAnchors.operatingRegime(parent, sfDir) { spark =>
+      SparkEntry.queries.foreach { case (name, fn) =>
+        if (keep(name))
+          try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          catch { case e: Throwable =>
+            System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          }
+      }
     }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(keep))
-    spark.stop()
+    parent.stop()
   }
 }

@@ -66,10 +66,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * re-scans its DataFrame will hit deleted files. Long-running readers
   * (a week-old notebook over a daily-rolled index) must either
   * re-resolve per query or raise the retention depth:
-  * `spark.conf.set("spark.graft.index.keepVersions", k)` keeps the
-  * current and k−1 previous committed versions (k ≥ 2; read at publish
-  * time, so it guards the NEXT roll's GC — a reader's lifetime may span
-  * k−1 rolls).
+  * `spark.graft.index.keepVersions` = k on the publishing frame's session
+  * (`Sessions.withConf(index, "spark.graft.index.keepVersions" -> k)`)
+  * keeps the current and k−1 previous committed versions (k ≥ 2; read at
+  * publish time, so it guards the NEXT roll's GC — a reader's lifetime
+  * may span k−1 rolls).
   *
   * Catalog names are per-version (`{table}__v{N}`) and immutable once
   * created, so no DROP/CREATE flip ever races a reader's resolution; the

@@ -191,21 +191,21 @@ object BinaryMetrics {
           .agg(max("score").as("score"), pos, neg)
           .drop("bin")
       }
-    // Window over the score-aggregated relation (≤ #distinct scores or
-    // maxBins rows); single-partition window is intentional here — the
+    // Windows over the score-aggregated relation (≤ #distinct scores or
+    // maxBins rows); single-partition windows are intentional here — the
     // input is already reduced, so this is a driver-scale sort, not a
-    // data-scale one.
+    // data-scale one. The class totals are an unordered whole-relation
+    // window beside the cumulative one, so building the frame runs no
+    // job; `Long / Long` divides as doubles, as `Long / Double` did.
     val w = Window.orderBy(desc("score"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val totals = byScore.agg(sum("pos"), sum("neg")).head()
-    val (totP, totN) = (totals.getLong(0).toDouble, totals.getLong(1).toDouble)
     byScore
       .withColumn("cum_tp", sum("pos").over(w))
       .withColumn("cum_fp", sum("neg").over(w))
       .select(
         col("score"),
-        (col("cum_fp") / lit(totN)).as("fpr"),
-        (col("cum_tp") / lit(totP)).as("tpr"))
+        (col("cum_fp") / sum("neg").over()).as("fpr"),
+        (col("cum_tp") / sum("pos").over()).as("tpr"))
       .orderBy(desc("score"))
   }
 

@@ -7269,8 +7269,8 @@ object LlmQueries {
     val tsBase = q287TsBase
     def bCol(c: Column): Column =
       when(c % 23 === 0, lit(0L)).otherwise(c % 2 + 1)
-    SavedOnce.scratch("q287", dir)(b =>
-        graft.streaming.EventStreams.withStatePartitions(spark, 4) {
+    SavedOnce.scratch("q287", dir)(b => graft.Sessions.withConf(spark,
+        graft.streaming.EventStreams.FixtureStatePartitions) { spark =>
       val docs = Tables.documents(spark, dir)
       val reps = docs
         .withColumn("fp",
@@ -7391,7 +7391,8 @@ object LlmQueries {
         .as[graft.streaming.EventStreams.Event]
       val sessions = graft.streaming.EventStreams
         .twsSessionize(stream, gapMs = 30 * 60000L)
-      val q = graft.streaming.EventStreams.withRocksDbState(spark) {
+      val q = graft.Sessions.withConf(sessions,
+          graft.streaming.EventStreams.RocksDbState) { sessions =>
         sessions.writeStream
           .foreachBatch(
             (batch: org.apache.spark.sql.Dataset[
@@ -7493,10 +7494,10 @@ object LlmQueries {
     def trancheCol(c: Column): Column =
       when(c % 23 === 0, lit(0L)).otherwise(c % 2 + 1)
     // fixture streams run with NARROW state partitioning (see
-    // [[EventStreams.withStatePartitions]]) — every estate audit pays
-    // one state-store open per checkpoint partition per read
-    val base = SavedOnce.scratch("q289", dir)(b =>
-        EventStreams.withStatePartitions(spark, 4) {
+    // [[EventStreams.FixtureStatePartitions]]) — every estate audit
+    // pays one state-store open per checkpoint partition per read
+    val base = SavedOnce.scratch("q289", dir)(b => graft.Sessions.withConf(
+        spark, EventStreams.FixtureStatePartitions) { spark =>
       val users = Tables.events(spark, dir).select("user_id").distinct()
       val subj = RelationalQueries.gatedBroadcast(graft.Materialize(
         users.filter(col("user_id") % 23 === 0)))
@@ -7528,8 +7529,9 @@ object LlmQueries {
           EventStreams.upsertBatch(bt.toDF(), id, s"$b/fm_out"))
         .option("checkpointLocation", s"$b/fm_ckpt")
         .outputMode("append").start())
-      drive(EventStreams.withRocksDbState(spark) {
-        EventStreams.twsSessionize(sessStream(), gapMs).writeStream
+      drive(graft.Sessions.withConf(
+          EventStreams.twsSessionize(sessStream(), gapMs),
+          EventStreams.RocksDbState) { _.writeStream
           .foreachBatch((bt: org.apache.spark.sql.Dataset[
               EventStreams.SessionOut], id: Long) =>
             EventStreams.upsertBatch(bt.toDF(), id, s"$b/tw_out"))
@@ -7565,7 +7567,7 @@ object LlmQueries {
         EventStreams.eraseFromSink(spark, out, subj, "user_id")
       }
       b
-    })  // end withStatePartitions
+    })  // end the fixture's narrow-partition scope
 
     // ---- attestation: subject sets recomputed independently of the
     // fixture (the q274 lesson), each broadcast into the semi-joins
@@ -7766,8 +7768,8 @@ object LlmQueries {
     val stepN = 7200L  // near-dedup tranche spacing (2 h)
     def trancheCol(c: Column): Column =
       when(c % 23 === 0, lit(0L)).otherwise(c % 2 + 1)
-    SavedOnce.scratch("q292", dir)(b =>
-        graft.streaming.EventStreams.withStatePartitions(spark, 4) {
+    SavedOnce.scratch("q292", dir)(b => graft.Sessions.withConf(spark,
+        graft.streaming.EventStreams.FixtureStatePartitions) { spark =>
       import graft.streaming.EventStreams
       implicit val sp: SparkSession = spark
       import spark.implicits._
@@ -7797,8 +7799,9 @@ object LlmQueries {
                 "event_id BIGINT")
         .option("maxFilesPerTrigger", 1).parquet(s"$b/fn_in")
         .as[EventStreams.FunnelEvent]
-      val fq = EventStreams.withRocksDbState(spark) {
-        EventStreams.twsFunnelSessionize(fStream).writeStream
+      val fq = graft.Sessions.withConf(
+          EventStreams.twsFunnelSessionize(fStream),
+          EventStreams.RocksDbState) { _.writeStream
           .foreachBatch((bt: org.apache.spark.sql.Dataset[
               EventStreams.FunnelOut], id: Long) =>
             EventStreams.upsertBatch(bt.toDF(), id, s"$b/fn_out"))

@@ -954,19 +954,20 @@ object RelationalQueries {
     val ord = StatsCatalog.ensureTable(spark, dir, "orders")
     StatsCatalog.clear(spark, cust)
     StatsCatalog.clear(spark, ord)
-    val blindSize = StatsCatalog.withConfs(
-      spark, "spark.sql.cbo.enabled" -> "false") {
+    val blindSize = graft.Sessions.withConf(
+      spark, "spark.sql.cbo.enabled" -> "false") { spark =>
       spark.table(cust).where(col("c_acctbal").between(100, 400))
         .select("c_custkey")
         .queryExecution.optimizedPlan.stats.sizeInBytes.toLong
     }
     val threshold = math.max(64L, blindSize / 2)
-    def scenario(tag: String, cbo: Boolean) = {
-      spark.catalog.refreshTable(cust) // fresh statsCache per leg
-      spark.catalog.refreshTable(ord)
-      StatsCatalog.withConfs(spark,
-        "spark.sql.cbo.enabled" -> cbo.toString,
-        "spark.sql.autoBroadcastJoinThreshold" -> threshold.toString) {
+    // each leg plans on a fresh clone: its relation cache is empty, so
+    // it reads the statistics the catalog holds at that moment
+    def scenario(tag: String, cbo: Boolean) =
+      graft.Sessions.withConf(spark,
+          "spark.sql.cbo.enabled" -> cbo.toString,
+          "spark.sql.autoBroadcastJoinThreshold" -> threshold.toString
+      ) { spark =>
         val df = spark.sql(
           s"""SELECT count(*) AS n_rows,
              |  CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(12,2)))
@@ -984,7 +985,6 @@ object RelationalQueries {
         val r = df.head()
         (tag, strat, r.getLong(0), r.getString(1))
       }
-    }
     val s1 = scenario("a_no_stats_cbo_on", cbo = true)
     StatsCatalog.publish(spark, cust,
       Seq("c_custkey", "c_acctbal", "c_nationkey"))
@@ -1188,11 +1188,10 @@ object RelationalQueries {
           }
       }.sorted.mkString("+")
     }
-    def scenario(tag: String, reorder: Boolean) = {
-      Seq(cust, ord, nat).foreach(spark.catalog.refreshTable)
-      StatsCatalog.withConfs(spark,
+    def scenario(tag: String, reorder: Boolean) =
+      graft.Sessions.withConf(spark,
         "spark.sql.cbo.enabled" -> "true",
-        "spark.sql.cbo.joinReorder.enabled" -> reorder.toString) {
+        "spark.sql.cbo.joinReorder.enabled" -> reorder.toString) { spark =>
         val df = spark.sql(
           s"""SELECT count(*) AS n_rows,
              |  CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(12,2)))
@@ -1204,7 +1203,6 @@ object RelationalQueries {
         val r = df.head()
         (tag, bottomJoin(df), r.getLong(0), r.getString(1))
       }
-    }
     val s1 = scenario("a_written_order", reorder = false)
     val s2 = scenario("b_reordered", reorder = true)
     import spark.implicits._

@@ -708,7 +708,8 @@ object TimeSeriesQueries {
       val ds = stream.as[graft.streaming.EventStreams.FunnelEvent]
       val stages = if (useTws) es.twsFunnelSessionize(ds)
                    else es.funnelSessionize(ds)
-      val writer = stages.writeStream
+      def start(stages: org.apache.spark.sql.Dataset[
+          graft.streaming.EventStreams.FunnelOut]) = stages.writeStream
         .foreachBatch {
           (batch: org.apache.spark.sql.Dataset[
              graft.streaming.EventStreams.FunnelOut], id: Long) =>
@@ -717,8 +718,10 @@ object TimeSeriesQueries {
         }
         .option("checkpointLocation", s"$base/ckpt")
         .outputMode("append")
-      val q = if (useTws) es.withRocksDbState(spark)(writer.start())
-              else writer.start()
+        .start()
+      val q = if (useTws) graft.Sessions.withConf(
+                stages, es.RocksDbState)(start)
+              else start(stages)
       try q.processAllAvailable() finally q.stop()
       out
     }

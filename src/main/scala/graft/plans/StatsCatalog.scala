@@ -193,20 +193,4 @@ object StatsCatalog {
     loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .getContentSummary(loc).getLength
   }
-
-  /** Run `body` with the given SQL confs, restoring prior values (or
-    * unsetting) afterwards.
-    */
-  def withConfs[T](spark: SparkSession, confs: (String, String)*)
-                  (body: => T): T = {
-    val old = confs.map { case (k, _) =>
-      k -> spark.conf.getOption(k)
-    }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
 }

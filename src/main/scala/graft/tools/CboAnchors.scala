@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
   BroadcastNestedLoopJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 
+import graft.Sessions
 import graft.operators.SqlAnchors
 import graft.plans.StatsCatalog
 
@@ -69,25 +70,50 @@ object CboAnchors {
 
   /** The operating optimizer regime Bench, Verify and Probe run under:
     * the twins' statistics published on the catalog tables at `dir`,
-    * cbo + join reorder on. Returns the number of tables published.
+    * then `body` on a clone of `spark` with cbo + join reorder on.
     */
-  def operatingRegime(spark: SparkSession, dir: String): Int = {
+  def operatingRegime[T](spark: SparkSession, dir: String)
+                        (body: SparkSession => T): T = {
     val mapping = ensureTables(spark, dir)
     publishAll(spark, mapping)
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-    mapping.size
+    System.err.println("[cbo] regime ON: statistics published on " +
+      s"${mapping.size} anchor catalog tables")
+    Sessions.withConf(spark, cboOn: _*)(body)
   }
 
-  /** One leg of the sweep: compile every twin under the given confs
-    * and return name → space-joined join algorithms.
+  private val cboOn = Seq("spark.sql.cbo.enabled" -> "true",
+                          "spark.sql.cbo.joinReorder.enabled" -> "true")
+
+  /** The four legs of a sweep over `twins`: the blind legs with the
+    * statistics of `mapping`'s tables cleared, then `publish`, then the
+    * cbo legs. Each leg compiles every twin on a clone of `spark` under
+    * the leg's confs: name → leg → space-joined join algorithms.
     */
-  private def legAlgos(spark: SparkSession,
-                       mapping: Map[String, String]): Map[String, String] =
-    SqlAnchors.twins.map { case (name, sql) =>
-      name -> joinAlgos(
-        spark.sql(SqlAnchors.rebind(sql, mapping))).mkString(" ")
-    }.toMap
+  private def legs(spark: SparkSession, twins: Seq[(String, String)],
+                   mapping: Map[String, String])(publish: => Unit)
+      : Seq[(String, Map[String, String])] = {
+    val scaled =
+      "spark.sql.autoBroadcastJoinThreshold" -> (128 * 1024).toString
+    val blindConf = "spark.sql.cbo.enabled" -> "false"
+    def leg(confs: (String, String)*): Map[String, String] =
+      Sessions.withConf(spark, confs: _*) { spark =>
+        twins.map { case (name, sql) =>
+          name -> joinAlgos(
+            spark.sql(SqlAnchors.rebind(sql, mapping))).mkString(" ")
+        }.toMap
+      }
+    mapping.values.foreach(StatsCatalog.clear(spark, _))
+    val blind = leg(blindConf)
+    val blindT = leg(blindConf, scaled)
+    publish
+    val cbo = leg(cboOn: _*)
+    val cboT = leg(cboOn :+ scaled: _*)
+    twins.map { case (name, _) =>
+      name -> Map("blind" -> blind(name), "cbo" -> cbo(name),
+                  "blind@128k" -> blindT(name),
+                  "cbo@128k" -> cboT(name))
+    }
+  }
 
   /** Per-anchor join algorithms across four legs. At local SF every
     * table fits under the default 10 MB broadcast threshold, so the
@@ -104,29 +130,7 @@ object CboAnchors {
   def sweep(spark: SparkSession, dir: String)
       : Seq[(String, Map[String, String])] = {
     val mapping = ensureTables(spark, dir)
-    val scaledT = (128 * 1024).toString
-    mapping.values.foreach(StatsCatalog.clear(spark, _))
-    val blind = StatsCatalog.withConfs(spark,
-      "spark.sql.cbo.enabled" -> "false")(legAlgos(spark, mapping))
-    val blindT = StatsCatalog.withConfs(spark,
-      "spark.sql.cbo.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> scaledT)(
-      legAlgos(spark, mapping))
-    publishAll(spark, mapping)
-    val cbo = StatsCatalog.withConfs(spark,
-      "spark.sql.cbo.enabled" -> "true",
-      "spark.sql.cbo.joinReorder.enabled" -> "true")(
-      legAlgos(spark, mapping))
-    val cboT = StatsCatalog.withConfs(spark,
-      "spark.sql.cbo.enabled" -> "true",
-      "spark.sql.cbo.joinReorder.enabled" -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> scaledT)(
-      legAlgos(spark, mapping))
-    SqlAnchors.twins.map { case (name, _) =>
-      name -> Map("blind" -> blind(name), "cbo" -> cbo(name),
-                  "blind@128k" -> blindT(name),
-                  "cbo@128k" -> cboT(name))
-    }
+    legs(spark, SqlAnchors.twins, mapping)(publishAll(spark, mapping))
   }
 
   /** The epoch-day-twin sweep (q17/q19 rewritten onto
@@ -145,30 +149,11 @@ object CboAnchors {
     val dayName = StatsCatalog.ensureDayTable(spark, dir, "orders",
                                               Seq("o_orderdate"))
     val mapping = base + ("orders_day" -> dayName)
-    val scaledT = (128 * 1024).toString
-    def legs(confs: (String, String)*): Map[String, String] =
-      StatsCatalog.withConfs(spark, confs: _*)(
-        SqlAnchors.dayTwins.map { case (name, sql) =>
-          name -> joinAlgos(
-            spark.sql(SqlAnchors.rebind(sql, mapping))).mkString(" ")
-        }.toMap)
-    mapping.values.foreach(StatsCatalog.clear(spark, _))
-    val blind = legs("spark.sql.cbo.enabled" -> "false")
-    val blindT = legs("spark.sql.cbo.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> scaledT)
-    publishAll(spark, base)
-    SqlAnchors.dayStatsColumns.foreach { case (t, cols) =>
-      StatsCatalog.publish(spark, mapping(t), cols)
-    }
-    val cbo = legs("spark.sql.cbo.enabled" -> "true",
-      "spark.sql.cbo.joinReorder.enabled" -> "true")
-    val cboT = legs("spark.sql.cbo.enabled" -> "true",
-      "spark.sql.cbo.joinReorder.enabled" -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> scaledT)
-    SqlAnchors.dayTwins.map { case (name, _) =>
-      name -> Map("blind" -> blind(name), "cbo" -> cbo(name),
-                  "blind@128k" -> blindT(name),
-                  "cbo@128k" -> cboT(name))
+    legs(spark, SqlAnchors.dayTwins, mapping) {
+      publishAll(spark, base)
+      SqlAnchors.dayStatsColumns.foreach { case (t, cols) =>
+        StatsCatalog.publish(spark, mapping(t), cols)
+      }
     }
   }
 
@@ -201,7 +186,7 @@ object CboAnchors {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = graft.Sessions.local(
+    val spark = Sessions.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"), "graft-cbo-anchors")
     printSweep(sweep(spark, dir))
     printSweep(sweepDay(spark, dir))

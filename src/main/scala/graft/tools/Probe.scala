@@ -219,16 +219,16 @@ object Probe {
 
   /** `cost` under the operating regime, one TSV block per query. */
   private def printCost(spark: SparkSession, dir: String,
-                        names: Seq[String], prefix: String): Unit = {
-    CboAnchors.operatingRegime(spark, dir)
-    names.foreach { q =>
-      try costLines(cost(spark, dir, q))
-        .foreach(l => println(s"$prefix\t$l"))
-      catch { case e: Throwable =>
-        println(s"$prefix\t$q\tERROR\t${e.getMessage}")
+                        names: Seq[String], prefix: String): Unit =
+    CboAnchors.operatingRegime(spark, dir) { spark =>
+      names.foreach { q =>
+        try costLines(cost(spark, dir, q))
+          .foreach(l => println(s"$prefix\t$l"))
+        catch { case e: Throwable =>
+          println(s"$prefix\t$q\tERROR\t${e.getMessage}")
+        }
       }
     }
-  }
 
   def main(args: Array[String]): Unit = args.toList match {
     case "cost" :: dir :: names =>
@@ -238,20 +238,21 @@ object Probe {
       spark.stop()
 
     case "explain" :: dir :: outDir :: suffix :: names =>
-      val spark = session(sweep = false)
-      CboAnchors.operatingRegime(spark, dir)
+      val parent = session(sweep = false)
       Files.createDirectories(Paths.get(outDir))
-      for (q <- known(names)) {
-        try {
-          val txt = SparkEntry.queries(q)(spark, dir)
-            .queryExecution.explainString(FormattedMode)
-          Files.writeString(Paths.get(s"$outDir/${q}_$suffix.txt"), txt)
-          println(s"[explain] wrote ${q}_$suffix.txt")
-        } catch { case e: Throwable =>
-          println(s"[explain] $q FAILED: ${e.getMessage}")
+      CboAnchors.operatingRegime(parent, dir) { spark =>
+        for (q <- known(names)) {
+          try {
+            val txt = SparkEntry.queries(q)(spark, dir)
+              .queryExecution.explainString(FormattedMode)
+            Files.writeString(Paths.get(s"$outDir/${q}_$suffix.txt"), txt)
+            println(s"[explain] wrote ${q}_$suffix.txt")
+          } catch { case e: Throwable =>
+            println(s"[explain] $q FAILED: ${e.getMessage}")
+          }
         }
       }
-      spark.stop()
+      parent.stop()
 
     case "scale" :: dir :: ns :: names =>
       val spark = session(sweep = true)

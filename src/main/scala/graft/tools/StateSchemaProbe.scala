@@ -45,9 +45,9 @@ object StateSchemaProbe {
     fm.show(false)
 
     // TWS sessions
-    val q2 = EventStreams.withRocksDbState(spark) {
-      EventStreams.twsSessionize(stream(), gapMs = 30 * 60000L)
-        .writeStream
+    val q2 = graft.Sessions.withConf(
+        EventStreams.twsSessionize(stream(), gapMs = 30 * 60000L),
+        EventStreams.RocksDbState) { _.writeStream
         .foreachBatch((bt: org.apache.spark.sql.Dataset[
             EventStreams.SessionOut], id: Long) =>
           EventStreams.upsertBatch(bt.toDF(), id, s"$b/tw_out"))

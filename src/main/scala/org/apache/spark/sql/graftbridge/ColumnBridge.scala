@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, Dataset, SparkSession, classic}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
@@ -31,4 +31,29 @@ object ListenerBridge {
 object ShutdownBridge {
   def deleteAtExit(dir: java.io.File): Unit =
     org.apache.spark.util.ShutdownHookManager.registerShutdownDeleteDir(dir)
+}
+
+/** Session-clone bridge for `graft.Sessions.withConf`: Spark 4 scopes
+  * `cloneSession`, `withActive` and the `classic.Dataset` constructors
+  * `private[sql]`.
+  * A clone shares the SparkContext, cache manager and external catalog
+  * with its parent and copies the parent's conf, functions and temp
+  * views; what the clone then sets or registers stays on the clone.
+  */
+object SessionBridge {
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** `body` with `spark` as this thread's active session, so what reads
+    * the conf through `SQLConf.get` (plan statistics, for one) sees
+    * `spark`'s; the previous active session is restored after.
+    */
+  def withActive[T](spark: SparkSession)(body: => T): T =
+    spark.withActive(body)
+
+  /** `ds`'s plan and encoder, planned and executed under `session`. */
+  def rebind[T](ds: Dataset[T], session: SparkSession): Dataset[T] =
+    classic.Dataset(session.asInstanceOf[classic.SparkSession],
+                    ds.asInstanceOf[classic.Dataset[T]].logicalPlan)(
+                    ds.encoder)
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.llm.Dedup
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
 /** The reliable-checkpoint escape hatch: with a checkpoint dir + the
   * session flag set, every iterative materialization point switches from
@@ -10,50 +10,46 @@ import org.apache.spark.sql.functions._
   */
 class MaterializeSpec extends SparkSpec {
 
-  private def withReliable[A](body: => A): A = {
+  private def withReliable[A](body: SparkSession => A): A = {
     spark.sparkContext.setCheckpointDir(tmpDir("reliable_ckpt"))
-    spark.conf.set(Materialize.ReliableKey, "true")
-    try body
-    finally spark.conf.set(Materialize.ReliableKey, "false")
+    Sessions.withConf(spark, Materialize.ReliableKey -> "true")(body)
   }
 
   test("flag resolution: reliable only when BOTH the conf flag and a " +
        "checkpoint dir are present") {
-    import spark.implicits._
-    val df = Seq(1, 2).toDF("x")
-    spark.conf.set(Materialize.ReliableKey, "false")
+    val df = spark.range(2).toDF("x")
     assert(!Materialize.reliable(df))
-    withReliable { assert(Materialize.reliable(df)) }
+    withReliable { spark =>
+      assert(Materialize.reliable(spark.range(2).toDF("x")))
+    }
     assert(!Materialize.reliable(df))
   }
 
   test("clustersFromEdges under reliable checkpointing: identical closure " +
        "on a multi-round chain graph") {
-    import spark.implicits._
     // a long chain forces several contraction rounds; disable the local
     // union-find finish by keeping the graph iterative? No — exercise the
     // DEFAULT path exactly as production would, both modes end-to-end.
     val n = 400
-    val vertices = (0L until n.toLong).toDF("doc_id")
-    val pairs = (0L until (n - 1).toLong)
-      .map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val base = Dedup.clustersFromEdges(vertices, pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    val rel = withReliable {
+    def closure(spark: SparkSession): Seq[(Long, Long)] = {
+      import spark.implicits._
+      val vertices = (0L until n.toLong).toDF("doc_id")
+      val pairs = (0L until (n - 1).toLong)
+        .map(i => (i, i + 1)).toDF("doc_a", "doc_b")
       Dedup.clustersFromEdges(vertices, pairs)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     }
+    val base = closure(spark)
+    val rel = withReliable(closure)
     assert(rel == base, "reliable mode must not change the closure")
     assert(base.forall(_._2 == 0L), "chain collapses to one cluster")
   }
 
   test("curation funnel under reliable checkpointing: identical output") {
-    val base = graft.operators.LlmQueries
+    def funnel(spark: SparkSession) = graft.operators.LlmQueries
       .q70CurationFunnel(spark, sf0001).collect().map(_.toSeq).toSeq
-    val rel = withReliable {
-      graft.operators.LlmQueries
-        .q70CurationFunnel(spark, sf0001).collect().map(_.toSeq).toSeq
-    }
+    val base = funnel(spark)
+    val rel = withReliable(funnel)
     assert(rel == base)
   }
 }

@@ -5,23 +5,12 @@ import org.apache.spark.sql.graftbridge.ShutdownBridge
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session base for all specs: one local session per suite, UTC +
-  * AQE config identical to the runtime entrypoints (graft.Sessions).
+/** Shared session base for all specs: one local session for the whole
+  * test JVM (getOrCreate, never stopped between suites), UTC + AQE config
+  * identical to the runtime entrypoints (graft.Sessions).
   */
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = {
-    val s = Sessions.local("4", getClass.getSimpleName)
-    // The JVM-wide state-store maintenance thread starts with the
-    // interval of the FIRST stateful query's conf and then services
-    // every loaded provider — at the default 60 s it races the bounded
-    // streaming specs' checkpoint temp dirs and fills the test log
-    // with ignored-but-red CANNOT_COMMIT / FileNotFoundException
-    // stacks (round-15 judge's log). Maintenance is space reclamation
-    // only (commit durability is the commit path; TTL is read-path
-    // enforced), so for a test JVM it can simply never fire.
-    s.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "2h")
-    s
-  }
+  lazy val spark: SparkSession = Sessions.local("4", getClass.getSimpleName)
 
   val sf0001 = sys.env.getOrElse("SPARK_GRAFT_SF0001_DIR",
                                  "/root/testdata/sf0.001")
@@ -34,12 +23,6 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def assumeData(dir: String): Unit =
     assume(new java.io.File(dir).isDirectory,
            s"driver testdata not present at $dir")
-
-  override def afterAll(): Unit = {
-    // Session is shared process-wide (getOrCreate); don't stop between
-    // suites — sbt forks one JVM for the whole test run.
-    super.afterAll()
-  }
 
   /** A fresh scratch dir, deleted at JVM exit. */
   def tmpDir(prefix: String): String = {

@@ -41,15 +41,12 @@ class NfcNormalizeExprSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq(s"$angstromDecomposed mixed $cafeDecomposed end").toDF("s")
     val fromCodegen = df.selectExpr("nfc_normalize(s)").head().getString(0)
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
-      val interpreted = df.selectExpr("nfc_normalize(s)").head().getString(0)
-      assert(fromCodegen == interpreted)
-      assert(interpreted == s"$angstromPrecomposed mixed $cafePrecomposed end")
-    } finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    val interpreted = graft.Sessions.withConf(df,
+        "spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
+      _.selectExpr("nfc_normalize(s)").head().getString(0)
     }
+    assert(fromCodegen == interpreted)
+    assert(interpreted == s"$angstromPrecomposed mixed $cafePrecomposed end")
   }
 }

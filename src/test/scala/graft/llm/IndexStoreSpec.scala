@@ -1,7 +1,7 @@
 package graft.llm
 
-import graft.SparkSpec
-import org.apache.spark.sql.DataFrame
+import graft.{Sessions, SparkSpec}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The daily-ingest contract: an index built yesterday must classify
@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   */
 class IndexStoreSpec extends SparkSpec {
 
-  private def corpusBatch: (DataFrame, DataFrame) = {
+  private def corpusBatch(spark: SparkSession): (DataFrame, DataFrame) = {
     import spark.implicits._
     val corpusText = "the quick brown fox jumps over the lazy dog near " +
       "the quiet river bank while morning light settles on the water"
@@ -36,7 +36,7 @@ class IndexStoreSpec extends SparkSpec {
     }.toMap
 
   test("minhash index save→load→classify is byte-identical to in-memory") {
-    val (corpus, batch) = corpusBatch
+    val (corpus, batch) = corpusBatch(spark)
     val index = Dedup.minhashIndexPortable(corpus, "doc_id", "text")
     val mem = classified(
       Dedup.minhashIncrementalPortable(batch, index, "doc_id", "text"))
@@ -52,12 +52,11 @@ class IndexStoreSpec extends SparkSpec {
 
   test("loaded minhash index joins without index-side Exchanges " +
        "(fewer shuffles than a plain-parquet round-trip)") {
-    val (corpus, batch) = corpusBatch
-    val index = Dedup.minhashIndexPortable(corpus, "doc_id", "text")
     val plainDir = tmpDir("idx_plain")
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try Sessions.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") { spark =>
+      val (corpus, batch) = corpusBatch(spark)
+      val index = Dedup.minhashIndexPortable(corpus, "doc_id", "text")
       IndexStore.saveMinhashIndex(index, "idx_ex_mh", numBuckets = 4)
       index.buckets.write.mode("overwrite").parquet(s"$plainDir/buckets")
       index.shingles.write.mode("overwrite").parquet(s"$plainDir/shingles")
@@ -75,16 +74,13 @@ class IndexStoreSpec extends SparkSpec {
       val unbucketed = exchanges(plain)
       assert(bucketed < unbucketed,
              s"bucketed index must shuffle less: $bucketed vs $unbucketed")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      IndexStore.drop(spark, "idx_ex_mh")
-    }
+    } finally IndexStore.drop(spark, "idx_ex_mh")
   }
 
   test("cross-session load: a FRESH catalog re-registers the index from " +
        "its on-disk descriptor, bucketing intact, and re-save over stale " +
        "files is idempotent") {
-    val (corpus, batch) = corpusBatch
+    val (corpus, batch) = corpusBatch(spark)
     val index = Dedup.minhashIndexPortable(corpus, "doc_id", "text")
     val dir = Some(tmpDir("idx_cs"))
     val mem = classified(
@@ -135,6 +131,8 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   // ------------------------------------------------- versioned publication
+
+  private val KeepKey = "spark.graft.index.keepVersions"
 
   private def fpCorpus(n: Int): DataFrame = {
     import spark.implicits._
@@ -316,43 +314,38 @@ class IndexStoreSpec extends SparkSpec {
       fs.listStatus(new org.apache.hadoop.fs.Path(d))
         .map(_.getPath.getName).filter(_.startsWith("__v")).sorted.toSeq
     }
-    def publish(n: Int): Unit =
-      IndexStore.saveFingerprintIndex(
-        Dedup.fingerprintIndex(fpCorpus(n), "doc_id", "text"), name,
-        numBuckets = 4, dir)
+    // the depth is read from the published frame's session
+    def publish(n: Int, depth: String*): Unit =
+      Sessions.withConf(fpCorpus(n), depth.map(KeepKey -> _): _*) { c =>
+        IndexStore.saveFingerprintIndex(
+          Dedup.fingerprintIndex(c, "doc_id", "text"), name,
+          numBuckets = 4, dir)
+      }
     try {
-      spark.conf.set("spark.graft.index.keepVersions", "3")
-      (2 to 5).foreach(publish) // publishes v1..v4
+      (2 to 5).foreach(publish(_, "3")) // publishes v1..v4
       assert(vdirs == Seq("__v2", "__v3", "__v4"),
              s"depth 3 must keep current + two back, found $vdirs")
       // a reader that resolved v3 two rolls ago can still scan it
       assert(fpClassify(IndexStore.loadFingerprintIndex(spark, name, dir))
                .count(_(1) == true) == 5)
       // depth is per-publish: reverting to the default GCs back to 2
-      spark.conf.unset("spark.graft.index.keepVersions")
       publish(6) // v5
       assert(vdirs == Seq("__v4", "__v5"),
              s"default depth must GC the extra version, found $vdirs")
       // floor: depth 1 would let a crashed flip destroy the only copy
-      spark.conf.set("spark.graft.index.keepVersions", "1")
-      publish(7) // v6
+      publish(7, "1") // v6
       assert(vdirs == Seq("__v5", "__v6"),
              s"depth below 2 must clamp to 2, found $vdirs")
       // malformed tuning value must not abort the publish — GC runs
       // AFTER the commit marker, so a throw there would make a
       // successful roll look failed; defensive parse defaults to 2
-      spark.conf.set("spark.graft.index.keepVersions", "two")
-      publish(8) // v7
+      publish(8, "two") // v7
       assert(vdirs == Seq("__v6", "__v7"),
              s"malformed depth must default to 2, found $vdirs")
-      spark.conf.set("spark.graft.index.keepVersions", " 3 ")
-      publish(9) // v8
+      publish(9, " 3 ") // v8
       assert(vdirs == Seq("__v6", "__v7", "__v8"),
              s"padded numeric depth must still parse, found $vdirs")
-    } finally {
-      spark.conf.unset("spark.graft.index.keepVersions")
-      IndexStore.drop(spark, name)
-    }
+    } finally IndexStore.drop(spark, name)
   }
 
   test("vacuum: drops dead estates, GCs survivors to keepVersions, " +
@@ -362,10 +355,12 @@ class IndexStoreSpec extends SparkSpec {
     // so the sweep never touches estates other suites memoized
     val dead = "graft_vacspec_dead"
     val live = "graft_vacspec_live"
-    def publish(name: String, n: Int): Unit =
-      IndexStore.saveFingerprintIndex(
-        Dedup.fingerprintIndex(fpCorpus(n), "doc_id", "text"), name,
-        numBuckets = 4)
+    def publish(name: String, n: Int, depth: String*): Unit =
+      Sessions.withConf(fpCorpus(n), depth.map(KeepKey -> _): _*) { c =>
+        IndexStore.saveFingerprintIndex(
+          Dedup.fingerprintIndex(c, "doc_id", "text"), name,
+          numBuckets = 4)
+      }
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/")
     def vdirs(name: String): Seq[String] = {
       val p = new org.apache.hadoop.fs.Path(s"$wh/$name")
@@ -378,9 +373,7 @@ class IndexStoreSpec extends SparkSpec {
       publish(dead, 2)
       // three rolls at depth 3, then default depth: vacuum must GC the
       // survivor from 3 retained versions back down to 2
-      spark.conf.set("spark.graft.index.keepVersions", "3")
-      (2 to 4).foreach(publish(live, _)) // v1..v3 all retained
-      spark.conf.unset("spark.graft.index.keepVersions")
+      (2 to 4).foreach(publish(live, _, "3")) // v1..v3 all retained
       assert(vdirs(live) == Seq("__v1", "__v2", "__v3"))
       // register a version entry, then delete its dir out from under
       // the catalog — the dangling-entry case the sweep deregisters
@@ -412,7 +405,6 @@ class IndexStoreSpec extends SparkSpec {
                rep2.droppedCatalogEntries == 0,
              s"second sweep must be a no-op: $rep2")
     } finally {
-      spark.conf.unset("spark.graft.index.keepVersions")
       IndexStore.drop(spark, dead)
       IndexStore.drop(spark, live)
     }
@@ -452,14 +444,11 @@ class IndexStoreSpec extends SparkSpec {
        "the publish GC, the vacuum sweep, and the estate attestations") {
     assert(IndexStore.DefaultKeepVersions == 2)
     assert(IndexStore.keepVersions(spark) == 2)
-    try {
-      spark.conf.set("spark.graft.index.keepVersions", "5")
-      assert(IndexStore.keepVersions(spark) == 5)
-      spark.conf.set("spark.graft.index.keepVersions", "1")
-      assert(IndexStore.keepVersions(spark) == 2,
-             "floor of 2 preserves the crash-safety invariant")
-      spark.conf.set("spark.graft.index.keepVersions", "junk")
-      assert(IndexStore.keepVersions(spark) == 2)
-    } finally spark.conf.unset("spark.graft.index.keepVersions")
+    def depth(v: String): Int =
+      Sessions.withConf(spark, KeepKey -> v)(IndexStore.keepVersions)
+    assert(depth("5") == 5)
+    assert(depth("1") == 2,
+           "floor of 2 preserves the crash-safety invariant")
+    assert(depth("junk") == 2)
   }
 }

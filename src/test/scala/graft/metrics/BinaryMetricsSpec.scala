@@ -340,6 +340,10 @@ class BinaryMetricsSpec extends SparkSpec {
       assert(jobsOf(BinaryMetrics.weightedF1(df)) == 2)
       // the confusion aggregate's collect plus aucROC's
       assert(jobsOf(BinaryMetrics.summary(df)) == 4)
+      // the default curve: the cardinality pre-check and the window
+      // plan's collect, with the class totals inside the plan (an eager
+      // totals head() made it 8)
+      assert(jobsOf(BinaryMetrics.rocPoints(df).collect()) == 5)
     } finally { df.unpersist(); () }
   }
 

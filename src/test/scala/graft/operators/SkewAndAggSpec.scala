@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{Sessions, SparkSpec}
 import graft.functions.HistogramAgg
 import graft.llm.Dedup
 import org.apache.spark.sql.functions._
@@ -30,26 +30,18 @@ class SkewAndAggSpec extends SparkSpec {
     // the engine hand-salts deterministically (q35's bucket join); this
     // pins the OTHER coverage path — at 100× a skewed join with no manual
     // salt must still be split by AQE's runtime skew handling. Thresholds
-    // are lowered test-locally (the defaults key on 256 MB partitions);
-    // the shared session's values are restored in finally.
-    val conf = spark.conf
-    val keys = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes")
-    val saved = keys.map(k => k -> conf.getOption(k)).toMap
-    try {
-      // no broadcast: a 50-row dim would otherwise BHJ and sidestep the
-      // skew machinery entirely (which is the normal, correct plan — the
-      // scenario here is the non-broadcastable skewed join)
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-               "32k")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-      conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16k")
+    // are lowered on a clone (the defaults key on 256 MB partitions).
+    // No broadcast: a 50-row dim would otherwise BHJ and sidestep the
+    // skew machinery entirely (which is the normal, correct plan — the
+    // scenario here is the non-broadcastable skewed join).
+    Sessions.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" ->
+          "32k",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16k") {
+        spark =>
       // 90% of 40k fact rows land on key 7 → one hot shuffle partition
       val big = spark.range(40000).select(
         when(col("id") % 10 === 0, col("id") % 50).otherwise(lit(7L))
@@ -68,8 +60,6 @@ class SkewAndAggSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getString(1), r.getString(2))).sorted
       assert(rows.toSeq == salted.toSeq,
              "AQE-split join must be row-identical to the salted join")
-    } finally saved.foreach { case (k, v) =>
-      v match { case Some(x) => conf.set(k, x); case None => conf.unset(k) }
     }
   }
 

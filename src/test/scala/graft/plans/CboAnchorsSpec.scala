@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.SparkSpec
+import graft.{Sessions, SparkSpec}
 import graft.operators.SqlAnchors
 import graft.tools.CboAnchors
 
@@ -98,9 +98,9 @@ class CboAnchorsSpec extends SparkSpec {
       StatsCatalog.publish(spark, day, cols)
     }
     val mapping = base + ("orders_day" -> day)
-    StatsCatalog.withConfs(spark,
+    Sessions.withConf(spark,
       "spark.sql.cbo.enabled" -> "true",
-      "spark.sql.cbo.joinReorder.enabled" -> "true") {
+      "spark.sql.cbo.joinReorder.enabled" -> "true") { spark =>
       val daySql = SqlAnchors.rebind(
         SqlAnchors.dayTwins.toMap.apply("q17_semi_join_day"), mapping)
       val ntzSql = SqlAnchors.rebind(
@@ -136,9 +136,9 @@ class CboAnchorsSpec extends SparkSpec {
     assumeData(sf0001)
     val mapping = CboAnchors.ensureTables(spark, sf0001)
     CboAnchors.publishAll(spark, mapping)
-    StatsCatalog.withConfs(spark,
+    Sessions.withConf(spark,
       "spark.sql.cbo.enabled" -> "true",
-      "spark.sql.cbo.joinReorder.enabled" -> "true") {
+      "spark.sql.cbo.joinReorder.enabled" -> "true") { spark =>
       SqlAnchors.twins.foreach { case (name, sql) =>
         val viaCbo = spark.sql(SqlAnchors.rebind(sql, mapping))
           .collect().toSeq

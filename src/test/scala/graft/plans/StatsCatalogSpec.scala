@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.SparkSpec
+import graft.{Sessions, SparkSpec}
 import graft.operators.RelationalQueries
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
@@ -52,9 +52,8 @@ class StatsCatalogSpec extends SparkSpec {
     StatsCatalog.publish(spark, cust,
       Seq("c_custkey", "c_acctbal", "c_nationkey"))
     def filteredStats(cbo: Boolean) =
-      StatsCatalog.withConfs(spark,
-        "spark.sql.cbo.enabled" -> cbo.toString) {
-        spark.catalog.refreshTable(cust)
+      Sessions.withConf(spark,
+        "spark.sql.cbo.enabled" -> cbo.toString) { spark =>
         spark.table(cust).where(col("c_acctbal").between(100, 400))
           .select("c_custkey")
           .queryExecution.optimizedPlan.stats
@@ -85,9 +84,8 @@ class StatsCatalogSpec extends SparkSpec {
     val ev = StatsCatalog.ensureTable(spark, sf0001, "events")
     StatsCatalog.publish(spark, ev, Seq("value", "user_id"))
     def estRows() =
-      StatsCatalog.withConfs(spark,
-        "spark.sql.cbo.enabled" -> "true") {
-        spark.catalog.refreshTable(ev)
+      Sessions.withConf(spark,
+        "spark.sql.cbo.enabled" -> "true") { spark =>
         spark.table(ev).where(col("value").between(0.0, 50.0))
           .select("event_id")
           .queryExecution.optimizedPlan.stats.rowCount.get.toLong
@@ -135,9 +133,8 @@ class StatsCatalogSpec extends SparkSpec {
     val t = StatsCatalog.ensureTable(spark, base, "events_vk")
     StatsCatalog.publish(spark, t, Seq("vk"))
     def joinEst(): Long =
-      StatsCatalog.withConfs(spark,
-        "spark.sql.cbo.enabled" -> "true") {
-        spark.catalog.refreshTable(t)
+      Sessions.withConf(spark,
+        "spark.sql.cbo.enabled" -> "true") { spark =>
         val a = spark.table(t).select(col("vk"))
         val b = spark.table(t).select(col("vk").as("vk2"))
         a.join(b, col("vk") === col("vk2"))
@@ -193,8 +190,8 @@ class StatsCatalogSpec extends SparkSpec {
     val name = StatsCatalog.ensureTable(spark, base, "typed")
     def stats() = spark.sessionState.catalog
       .getTableMetadata(TableIdentifier(name)).stats.get.colStats
-    StatsCatalog.withConfs(spark,
-      "spark.sql.datetime.java8API.enabled" -> "true") {
+    Sessions.withConf(spark,
+      "spark.sql.datetime.java8API.enabled" -> "true") { spark =>
       StatsCatalog.publish(spark, name, Seq("ts", "d", "m"))
     }
     val java8 = stats()
@@ -203,8 +200,8 @@ class StatsCatalogSpec extends SparkSpec {
     assert(java8("d").max.get == "2024-06-07",
            s"LocalDate max must round-trip: ${java8("d").max}")
     assert(BigDecimal(java8("m").max.get) == BigDecimal("45.67"))
-    StatsCatalog.withConfs(spark,
-      "spark.sql.datetime.java8API.enabled" -> "false") {
+    Sessions.withConf(spark,
+      "spark.sql.datetime.java8API.enabled" -> "false") { spark =>
       StatsCatalog.publish(spark, name, Seq("ts", "d", "m"))
     }
     val legacy = stats()

@@ -1,18 +1,15 @@
 package graft.sources
 
-import graft.SparkSpec
-import org.apache.spark.sql.functions._
+import graft.{Sessions, SparkSpec}
 
 class BucketingSpec extends SparkSpec {
 
   test("bucketed equi-join runs without a shuffle Exchange") {
-    import spark.implicits._
-    val left = (0 until 2000).map(i => (i.toLong, s"l$i")).toDF("k", "lv")
-    val right = (0 until 2000).map(i => (i.toLong, s"r$i")).toDF("k", "rv")
-
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try Sessions.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") { spark =>
+      import spark.implicits._
+      val left = (0 until 2000).map(i => (i.toLong, s"l$i")).toDF("k", "lv")
+      val right = (0 until 2000).map(i => (i.toLong, s"r$i")).toDF("k", "rv")
       Bucketing.writeBucketed(left, "bkt_left", "k", 4)
       Bucketing.writeBucketed(right, "bkt_right", "k", 4)
 
@@ -30,7 +27,6 @@ class BucketingSpec extends SparkSpec {
       assert(plainPlan.contains("Exchange"),
              "control join over unbucketed data should shuffle")
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS bkt_left")
       spark.sql("DROP TABLE IF EXISTS bkt_right")
     }

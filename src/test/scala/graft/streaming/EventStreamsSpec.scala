@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{Sessions, SparkSpec}
+import org.apache.spark.sql.{Dataset, Encoder, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
@@ -12,6 +13,25 @@ class EventStreamsSpec extends SparkSpec {
   // watermark are dropped by stateful operators — keep fixtures clear of it
   private val base = 24L * 3600000L
   private def ts(minute: Int) = new Timestamp(base + minute * 60000L)
+
+  /** `f` over a memory stream fed `feed`, one trigger per batch, under
+    * the RocksDB provider: the rows of the clone's memory-sink view.
+    */
+  private def memorySink[I: Encoder, O](name: String, feed: Seq[Seq[I]],
+                                        ckpt: Option[String])
+                                       (f: Dataset[I] => Dataset[O])
+      : Seq[Row] = {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[I]
+    Sessions.withConf(f(input.toDS()), RocksDbState) { ds =>
+      val w = ds.writeStream.format("memory").queryName(name)
+        .outputMode("append")
+      val q = ckpt.fold(w)(w.option("checkpointLocation", _)).start()
+      try feed.foreach { b => input.addData(b); q.processAllAvailable() }
+      finally q.stop()
+      ds.sparkSession.table(name).collect().toSeq
+    }
+  }
 
   test("windowedCounts: tumbling windows aggregate by event time") {
     implicit val sqlCtx = spark.sqlContext
@@ -888,7 +908,6 @@ class EventStreamsSpec extends SparkSpec {
        "the flatMapGroupsWithState operator on the same feed, and the " +
        "named state variables read out per-variable via the state " +
        "source (stateVarName)") {
-    implicit val sqlCtx = spark.sqlContext
     implicit val sp = spark
     import spark.implicits._
     val feed = Seq(
@@ -899,24 +918,12 @@ class EventStreamsSpec extends SparkSpec {
       Seq(Event(ts(300), "c", 99, 0.0)),
       Seq(Event(ts(600), "c", 98, 0.0)))
     def run(name: String,
-            f: org.apache.spark.sql.Dataset[Event] =>
-               org.apache.spark.sql.Dataset[SessionOut],
-            ckpt: Option[String]): Seq[(Long, java.sql.Timestamp,
-                                        java.sql.Timestamp, Long,
-                                        Double)] = {
-      val input = MemoryStream[Event]
-      val w0 = f(input.toDS()).writeStream.format("memory")
-        .queryName(name).outputMode("append")
-      val w = ckpt.fold(w0)(c => w0.option("checkpointLocation", c))
-      val q = withRocksDbState(spark)(w.start())
-      try {
-        feed.foreach { b => input.addData(b); q.processAllAvailable() }
-      } finally q.stop()
-      spark.table(name).collect()
+            f: Dataset[Event] => Dataset[SessionOut],
+            ckpt: Option[String]) =
+      memorySink(name, feed, ckpt)(f)
         .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
                    r.getLong(3), r.getDouble(4)))
-        .sortBy(t => (t._1, t._2.getTime)).toSeq
-    }
+        .sortBy(t => (t._1, t._2.getTime))
     val ckpt = tmpDir("tws_ckpt")
     val viaTws = run("tws_par", twsSessionize(_, gapMs = 10 * 60000L),
                      Some(ckpt))
@@ -984,14 +991,14 @@ class EventStreamsSpec extends SparkSpec {
         .getOrElse(Seq.empty)
     def liveState(): Long = spark.read.format("statestore")
       .option("path", ckpt).option("stateVarName", "n").load().count()
-    def start(interval: String) = withRocksDbState(spark) {
-      input.toDS().groupByKey(_.user_id)
-        .transformWithState(new TtlCounter,
-                            TimeMode.ProcessingTime(),
-                            org.apache.spark.sql.streaming.OutputMode
-                              .Append())
-        .toDF("user_id", "n")
-        .writeStream
+    def start(interval: String) = Sessions.withConf(
+        input.toDS().groupByKey(_.user_id)
+          .transformWithState(new TtlCounter,
+                              TimeMode.ProcessingTime(),
+                              org.apache.spark.sql.streaming.OutputMode
+                                .Append())
+          .toDF("user_id", "n"),
+        RocksDbState) { _.writeStream
         .foreachBatch(
           (b: org.apache.spark.sql.Dataset[
              org.apache.spark.sql.Row], id: Long) =>
@@ -1072,7 +1079,6 @@ class EventStreamsSpec extends SparkSpec {
        "stages to the flatMapGroupsWithState funnel on the same feed " +
        "(shared fold — the second FMGWS user migrated), with the " +
        "named funnel/timer variables readable per-variable") {
-    implicit val sqlCtx = spark.sqlContext
     implicit val sp = spark
     import spark.implicits._
     // user 1 completes view→click→purchase then a second session
@@ -1086,21 +1092,10 @@ class EventStreamsSpec extends SparkSpec {
       Seq(FunnelEvent(ts(300), "view", 99, 900)),
       Seq(FunnelEvent(ts(600), "view", 98, 901)))
     def run(name: String,
-            f: org.apache.spark.sql.Dataset[FunnelEvent] =>
-               org.apache.spark.sql.Dataset[FunnelOut],
-            ckpt: Option[String]): Seq[(Long, Int)] = {
-      val input = MemoryStream[FunnelEvent]
-      val w0 = f(input.toDS()).writeStream.format("memory")
-        .queryName(name).outputMode("append")
-      val w = ckpt.fold(w0)(c => w0.option("checkpointLocation", c))
-      val q = withRocksDbState(spark)(w.start())
-      try {
-        feed.foreach { b => input.addData(b); q.processAllAvailable() }
-      } finally q.stop()
-      spark.table(name).collect()
-        .map(r => (r.getLong(0), r.getInt(1)))
-        .sortBy(identity).toSeq
-    }
+            f: Dataset[FunnelEvent] => Dataset[FunnelOut],
+            ckpt: Option[String]) =
+      memorySink(name, feed, ckpt)(f)
+        .map(r => (r.getLong(0), r.getInt(1))).sortBy(identity)
     val ckpt = tmpDir("twsf_ckpt")
     val viaTws = run("twsf_par",
                      twsFunnelSessionize(_, gapMs = 10 * 60000L),
