@@ -12,7 +12,11 @@ import java.nio.file.{Files, Paths}
   * shape about to be timed — a single up-front warmup phase left ~50
   * queries between q01's warmup and its timing, and the evicted warm
   * state showed up as a phantom 1.8× "regression" on the headline query
-  * in round 6), then 3 timed passes, MINIMUM reported (round-13
+  * in round 6. That state was, most likely, q01's generated classes:
+  * Spark's codegen cache then held its default 100 classes, fewer than
+  * ~50 queries generate, so q01's timed passes recompiled them.
+  * [[Sessions.CodegenCacheEntries]] now sizes the cache above that), then
+  * 3 timed passes, MINIMUM reported (round-13
   * protocol). Timing noise on a fixed plan is strictly one-sided — GC,
   * page-cache eviction, and JIT recompiles only ADD time — so the
   * fastest pass is the closest observation of the plan's true cost;

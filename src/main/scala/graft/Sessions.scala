@@ -16,9 +16,39 @@ import org.apache.spark.sql.graftbridge.SessionBridge
   * count here; on a real cluster AQE coalesces/splits post-shuffle partitions
   * at runtime, so the static value is only an initial hint. Adaptive skew-join
   * handling is left enabled (default) for the 100 TB design point.
+  *
+  * Codegen cache: Spark keeps one JVM-wide LRU cache of compiled
+  * generated classes, 100 entries by default. A perfbench JVM compiles
+  * 129 distinct classes on glue and 314 on curation, so at 100 every
+  * timed pass recompiled most of its working set (107 classes per pass
+  * on glue, 251 on curation). [[CodegenCacheEntries]] holds the largest
+  * working set about 3 times over, and a steady-state pass compiles
+  * nothing (plans/probe/codegen_cache.txt). The size is a static conf:
+  * it takes effect only when the session is first built, and Spark reads
+  * it once, when it first generates code in the JVM. So build the
+  * session before anything generates code.
   */
 object Sessions {
-  def local(cpus: String, appName: String = "graft"): SparkSession = {
+
+  /** `spark.sql.codegen.cache.maxEntries`: about 3× the largest measured
+    * working set (curation, 314 classes per perfbench JVM) and over 4×
+    * the most one `Bench` query compiles (q289, 226). A whole `Bench`
+    * run compiles about 5,600 distinct classes; Bench warms each query
+    * just before timing it, so it needs only the query's own set.
+    */
+  val CodegenCacheEntries = 1000
+
+  /** The JVM's session: the default session while its SparkContext is
+    * live, else a new one built with graft's conf. A live session is
+    * returned as it is, never handed to the builder again: the builder
+    * would re-apply the runtime confs to a session in use and cannot
+    * apply the static ones at all.
+    */
+  def local(cpus: String, appName: String = "graft"): SparkSession =
+    SparkSession.getDefaultSession.filterNot(_.sparkContext.isStopped)
+      .getOrElse(build(cpus, appName))
+
+  private def build(cpus: String, appName: String): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cpus]")
@@ -49,6 +79,8 @@ object Sessions {
       // negligible at corpus scale; excluded engine-wide.
       .config("spark.sql.optimizer.excludedRules",
               "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+      .config("spark.sql.codegen.cache.maxEntries",
+              CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -35,12 +35,14 @@ object BinaryMetrics {
       .agg(count(lit(1)).as("n"))
 
   /** E4 — distributed confusion matrix: the `qnli_test.py:183-193` pattern.
-    * Cardinality = #classes², safe at any data scale.
+    * Cardinality = #classes², safe at any data scale. The cells are
+    * sorted in one partition: a global `orderBy` would add a range
+    * sampling job to order at most #classes² rows.
     */
   def confusionMatrix(preds: Dataset[_], labelCol: String = "label",
                       predictionCol: String = "prediction"): DataFrame =
     confusionCells(preds, labelCol, predictionCol)
-      .orderBy("label", "prediction")
+      .coalesce(1).sortWithinPartitions("label", "prediction")
 
   /** The collected confusion aggregate. `cells` holds the non-null
     * (label, prediction, n) cells in [[confusionMatrix]]'s order (label,

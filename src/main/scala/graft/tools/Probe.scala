@@ -3,6 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -32,14 +33,16 @@ import graft.sources.Tables
 object Probe {
 
   /** One query's best pass: driver build and sink execution seconds,
-    * runtime counts, shuffle bytes written, the Catalyst phase seconds
-    * summed over every query the pass executed, and the pass's jobs
-    * grouped by call site (site → (jobs, job seconds)).
+    * runtime counts, shuffle bytes written, the generated classes
+    * compiled, the Catalyst phase seconds summed over every query the
+    * pass executed, and the pass's jobs grouped by call site (site →
+    * (jobs, job seconds)).
     */
   final case class Cost(name: String, build: Double, exec: Double,
                         jobs: Int, stages: Int, tasks: Int,
-                        shuffleBytes: Long, analysis: Double,
-                        optimization: Double, planning: Double,
+                        shuffleBytes: Long, compiles: Long,
+                        analysis: Double, optimization: Double,
+                        planning: Double,
                         sites: Seq[(String, (Int, Double))]) {
     def total: Double = build + exec
   }
@@ -134,18 +137,21 @@ object Probe {
     def pass(): Cost = {
       ListenerBridge.waitUntilEmpty(sc)
       c.reset()
+      val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(name)(spark, dir)
       val t1 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
       val t2 = System.nanoTime()
       ListenerBridge.waitUntilEmpty(sc)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount -
+        compiled0
       // the query Dataset was analysed eagerly while it was built
       c.addPhases(df.queryExecution)
       c.synchronized {
         Cost(name, (t1 - t0) / 1e9, (t2 - t1) / 1e9, c.jobs, c.stages,
-             c.tasks, c.shuffleBytes, c.analysis, c.optimization,
-             c.planning, c.sites.toSeq)
+             c.tasks, c.shuffleBytes, compiled, c.analysis,
+             c.optimization, c.planning, c.sites.toSeq)
       }
     }
     try {
@@ -158,14 +164,15 @@ object Probe {
   }
 
   private val costHeader: String = Seq("query", "t_total", "t_build",
-    "t_exec", "jobs", "stages", "tasks", "shuffleMB", "t_analysis",
-    "t_optimization", "t_planning").mkString("\t")
+    "t_exec", "jobs", "stages", "tasks", "shuffleMB", "compiles",
+    "t_analysis", "t_optimization", "t_planning").mkString("\t")
 
   /** The cost row, then one `site` line per call site. */
   private def costLines(r: Cost): Seq[String] =
     (f"${r.name}\t${r.total}%.3f\t${r.build}%.3f\t${r.exec}%.3f\t" +
        f"${r.jobs}\t${r.stages}\t${r.tasks}\t${r.shuffleBytes / 1e6}%.2f\t" +
-       f"${r.analysis}%.3f\t${r.optimization}%.3f\t${r.planning}%.3f") +:
+       f"${r.compiles}\t${r.analysis}%.3f\t${r.optimization}%.3f\t" +
+       f"${r.planning}%.3f") +:
       r.sites.map { case (site, (n, s)) =>
         f"  site\t$n%3d jobs\t$s%7.3f s\t$site"
       }

@@ -3,7 +3,13 @@ package graft
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -56,5 +62,48 @@ class SessionsSpec extends SparkSpec {
       assert(!spark.catalog.tableExists("sessions_spec_view"))
       assert(spark.table("sessions_spec_table").count() == 3)
     } finally spark.sql("DROP TABLE IF EXISTS sessions_spec_table")
+  }
+
+  /** Classes Spark has compiled in this JVM so far. */
+  private def compiles(): Long =
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  test("a second round of the same plans compiles no class: the codegen " +
+       "cache holds more than Spark's default 100 entries") {
+    // 150 distinct plans, 2 generated classes each
+    def round(): Long = {
+      val c0 = compiles()
+      (1 to 150).foreach(i =>
+        spark.range(10).selectExpr(s"id * $i + 7").collect())
+      compiles() - c0
+    }
+    assert(round() > 0)
+    assert(round() == 0, "classes recompiled: evicted from the cache")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+           Sessions.CodegenCacheEntries.toString)
+  }
+
+  /** The messages `body` logs at WARN or above. */
+  private def warnings(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("sessions-spec", null, null, true,
+                                        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    try body finally { root.removeAppender(appender); appender.stop() }
+    seen.asScala.toSeq
+  }
+
+  test("Sessions.local returns the live session as it is, without " +
+       "handing it to the builder again") {
+    val warned = warnings(assert(Sessions.local("2", "another") eq spark))
+    assert(!warned.exists(_.contains("Using an existing Spark session")),
+           warned.mkString("\n"))
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
   }
 }

@@ -69,9 +69,10 @@ class BinaryMetricsSpec extends SparkSpec {
       (1.0, 1.0), (1.0, 1.0), (1.0, 0.0),
       (0.0, 0.0), (0.0, 1.0)).toDF("label", "prediction")
     val cm = BinaryMetrics.confusionMatrix(df).collect()
-      .map(r => ((r.getDouble(0), r.getDouble(1)), r.getLong(2))).toMap
-    assert(cm == Map((1.0, 1.0) -> 2L, (1.0, 0.0) -> 1L,
-                     (0.0, 0.0) -> 1L, (0.0, 1.0) -> 1L))
+      .map(r => ((r.getDouble(0), r.getDouble(1)), r.getLong(2))).toSeq
+    // label, then prediction, ascending
+    assert(cm == Seq((0.0, 0.0) -> 1L, (0.0, 1.0) -> 1L,
+                     (1.0, 0.0) -> 1L, (1.0, 1.0) -> 2L))
   }
 
   test("E4 via stat.crosstab agrees with the confusion matrix") {
@@ -340,6 +341,9 @@ class BinaryMetricsSpec extends SparkSpec {
       assert(jobsOf(BinaryMetrics.weightedF1(df)) == 2)
       // the confusion aggregate's collect plus aucROC's
       assert(jobsOf(BinaryMetrics.summary(df)) == 4)
+      // the aggregate and its one-partition sort: no range sampling job
+      // (a global orderBy made it 4)
+      assert(jobsOf(BinaryMetrics.confusionMatrix(df).collect()) == 2)
       // the default curve: the cardinality pre-check and the window
       // plan's collect, with the class totals inside the plan (an eager
       // totals head() made it 8)
