@@ -36,15 +36,49 @@ object Probe {
     * runtime counts, shuffle bytes written, the generated classes
     * compiled, the Catalyst phase seconds summed over every query the
     * pass executed, and the pass's jobs grouped by call site (site →
-    * (jobs, job seconds)).
+    * (jobs, job seconds)); `spread` is the slowest timed pass's total
+    * over the best's.
     */
   final case class Cost(name: String, build: Double, exec: Double,
                         jobs: Int, stages: Int, tasks: Int,
                         shuffleBytes: Long, compiles: Long,
                         analysis: Double, optimization: Double,
                         planning: Double,
-                        sites: Seq[(String, (Int, Double))]) {
+                        sites: Seq[(String, (Int, Double))],
+                        spread: Double = 1.0) {
     def total: Double = build + exec
+
+    /** The layer row, in [[Cost.columns]] order. */
+    def row: Seq[String] = Seq(f"$total%.3f", f"$build%.3f", f"$exec%.3f",
+      s"$jobs", s"$stages", s"$tasks", f"${shuffleBytes / 1e6}%.2f",
+      s"$compiles", f"$analysis%.3f", f"$optimization%.3f",
+      f"$planning%.3f")
+  }
+
+  object Cost {
+    val columns: Seq[String] = Seq("t_total", "t_build", "t_exec", "jobs",
+      "stages", "tasks", "shuffleMB", "compiles", "t_analysis",
+      "t_optimization", "t_planning")
+  }
+
+  /** Timed passes after the one warm-up pass, in [[cost]] and Bench. */
+  val TimedPasses = 3
+
+  /** One untimed warm-up `pass()`, then [[TimedPasses]] timed ones: the
+    * fastest by `secs`, and the slowest's `secs` over the fastest's. A
+    * pass that throws ends the measurement.
+    */
+  def best[T](pass: () => T)(secs: T => Double): (T, Double) = {
+    pass()
+    val runs = Seq.fill(TimedPasses)(pass()).sortBy(secs)
+    (runs.head, secs(runs.last) / math.max(secs(runs.head), 1e-9))
+  }
+
+  /** Wall seconds of `body`. */
+  def seconds(body: => Unit): Double = {
+    val t0 = System.nanoTime()
+    body
+    (System.nanoTime() - t0) / 1e9
   }
 
   /** Frames that wrap a caller's job rather than identify it. */
@@ -125,9 +159,12 @@ object Probe {
                            e: Exception): Unit = addPhases(qe)
   }
 
-  /** The query in a warm-up pass, then the better of two timed passes,
-    * each built and run through the noop sink; the listener bus is
-    * drained after every pass so no event leaks into the next.
+  /** The query's [[best]] pass, each pass built and run through the
+    * noop sink, not `count()`, which lets Catalyst prune
+    * cardinality-preserving operators (projects, windows, left joins
+    * against aggregates keyed on the join key): the sink evaluates every
+    * output row and column and writes nothing. The listener bus is
+    * drained around every pass so no event leaks into the next.
     */
   def cost(spark: SparkSession, dir: String, name: String): Cost = {
     val c = new Counters
@@ -155,24 +192,20 @@ object Probe {
       }
     }
     try {
-      pass() // warm-up: also builds the per-dir memos
-      Seq(pass(), pass()).minBy(_.total)
+      // the warm-up also builds the per-dir memos
+      val (b, spread) = best(() => pass())(_.total)
+      b.copy(spread = spread)
     } finally {
       spark.listenerManager.unregister(c)
       sc.removeSparkListener(c)
     }
   }
 
-  private val costHeader: String = Seq("query", "t_total", "t_build",
-    "t_exec", "jobs", "stages", "tasks", "shuffleMB", "compiles",
-    "t_analysis", "t_optimization", "t_planning").mkString("\t")
+  private val costHeader: String = ("query" +: Cost.columns).mkString("\t")
 
   /** The cost row, then one `site` line per call site. */
   private def costLines(r: Cost): Seq[String] =
-    (f"${r.name}\t${r.total}%.3f\t${r.build}%.3f\t${r.exec}%.3f\t" +
-       f"${r.jobs}\t${r.stages}\t${r.tasks}\t${r.shuffleBytes / 1e6}%.2f\t" +
-       f"${r.compiles}\t${r.analysis}%.3f\t${r.optimization}%.3f\t" +
-       f"${r.planning}%.3f") +:
+    (r.name +: r.row).mkString("\t") +:
       r.sites.map { case (site, (n, s)) =>
         f"  site\t$n%3d jobs\t$s%7.3f s\t$site"
       }
