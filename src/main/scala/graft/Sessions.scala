@@ -27,6 +27,21 @@ import org.apache.spark.sql.graftbridge.SessionBridge
   * it takes effect only when the session is first built, and Spark reads
   * it once, when it first generates code in the JVM. So build the
   * session before anything generates code.
+  *
+  * Local filesystem: Spark 4.1's Hadoop, without libhadoop, starts a
+  * `chmod` process for every local directory it makes and every file it
+  * opens for write (`.crc` sidecars included) and a `readlink` process
+  * on every `FileContext` rename: 423 process starts per curation pass,
+  * most of them on task threads. `file://` therefore resolves to graft's
+  * [[graft.io.GraftLocalFileSystem]] (`fs.file.impl`, the `FileSystem`
+  * API: Parquet, CSV, tables, IndexStore, RDD checkpoints) and
+  * [[graft.io.GraftLocalFs]] (`fs.AbstractFileSystem.file.impl`, the
+  * `FileContext` API: streaming logs and state checkpoints), Hadoop's
+  * checksummed local filesystems over a raw layer that does both calls
+  * in-process. Bytes, `.crc` files and modes are Hadoop's. Other
+  * schemes (HDFS, S3) never load it. Hadoop caches the first `file://`
+  * `FileSystem` in a JVM, whatever conf made it, so build the session
+  * before anything touches the local filesystem.
   */
 object Sessions {
 
@@ -81,6 +96,10 @@ object Sessions {
               "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       .config("spark.sql.codegen.cache.maxEntries",
               CodegenCacheEntries.toString)
+      .config("spark.hadoop.fs.file.impl",
+              classOf[graft.io.GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+              classOf[graft.io.GraftLocalFs].getName)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

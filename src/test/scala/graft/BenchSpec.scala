@@ -14,8 +14,10 @@ class BenchSpec extends SparkSpec {
        "failed query is left out of queries and value and is ok:false") {
     assumeData(sf0001)
     val unknown = "q0_not_a_query"
+    var probes = 0
     val (contract, full) = Bench.run(spark, sf0001,
-      Seq("q01_pricing_summary", unknown), _ => 0.5)
+      Seq("q01_pricing_summary", unknown), { _ => probes += 1; 0.5 })
+    assert(probes == 1)
     val json = new ObjectMapper
     val line = json.readTree(contract)
     assert(line.fieldNames.asScala.toSeq == Seq("metric", "value", "unit",
@@ -29,6 +31,8 @@ class BenchSpec extends SparkSpec {
     assert(math.abs(line.get("value").asDouble - q01) < 1e-4)
 
     val file = json.readTree(full)
+    assert(file.get("calibration").asDouble == 0.5)
+    assert(!file.has("calibration_pre") && !file.has("calibration_post"))
     assert(file.get("ok").get("q01_pricing_summary").asBoolean)
     assert(file.get("ok").has(unknown) && !file.get("ok").get(unknown).asBoolean)
     val row = file.get("layers").get("q01_pricing_summary")
