@@ -605,23 +605,30 @@ object Dedup {
                            .unionByName(deltaDelta))
   }
 
-  /** The maxBucket boilerplate guard: drop every row of a (band, bucket)
-    * whose occupancy exceeds `maxBucket`. Counter + anti-join shape
-    * (round-18): a map-side-combined count over the narrow key yields
-    * the (tiny, storm-only) hot-bucket list, and an anti-join drops its
-    * rows — vs the previous `count() over (band, bucket)` window, which
-    * SORTS every bucket partition at corpus scale. Measured over the
-    * corpus replicated ×1/×5/×20: the anti-join never loses (0.86 vs
-    * 1.06, 0.50 vs 0.60, 0.86 vs 0.87 s) and wins asymptotically (no
-    * data-scale sort). Kept-row set is identical by construction.
+  /** The maxBucket boilerplate guard, graft's one guard shape: drop every
+    * row of a (band, bucket) whose occupancy exceeds `maxBucket`, with
+    * `count(1) over (band, bucket)`. It keeps the same rows as a
+    * counter + anti-join, but that shape references `banded` twice and
+    * adds an agg + join stage pair:
+    *
+    *  - the candidate generators (round-18 A/B, OPTIMIZATION_r18.md):
+    *    +1.2 s on a funnel-stage (tiny, checkpointed) input, a wash on the
+    *    corpus replicated ×20 (0.86 vs 0.87 s); q164's unmaterialized
+    *    image-hash subtree ran twice, 1.1 → 2.4 s;
+    *  - the index builds and rolls: over base ∪ delta, perfbench
+    *    curation's `roll.minhash` ran 18 jobs and 161 tasks under the
+    *    anti-join against 11 and 84 under the window
+    *    (`plans/probe/index_write_width.txt`).
+    *
+    * The window's per-(band, bucket) sort is bounded by `maxBucket` at any
+    * scale once storms are the only big buckets.
     */
-  private def dropHotBuckets(banded: DataFrame, maxBucket: Int): DataFrame = {
-    val hot = banded.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("__bsize"))
-      .filter(col("__bsize") > maxBucket)
-      .select("band", "bucket")
-    banded.join(hot, Seq("band", "bucket"), "left_anti")
-  }
+  private def dropHotBuckets(banded: DataFrame, maxBucket: Int): DataFrame =
+    banded
+      .withColumn("bsize", count(lit(1)).over(
+        Window.partitionBy("band", "bucket")))
+      .filter(col("bsize") <= maxBucket)
+      .drop("bsize")
 
   /** Shared LSH plumbing of the minhash pair generators
     * ([[minhashCandidatePairsPortable]], [[rollClusters]]): band-bucket
@@ -640,18 +647,8 @@ object Dedup {
     val banded = bandedBuckets(sigs, bands, bucketOfBand)
 
     // Drop pathological buckets (boilerplate storms) before the
-    // self-join. WINDOW shape on purpose (round-18 A/B, VERDICT item
-    // settled): the counter+anti-join alternative references the banded
-    // subtree twice and adds an agg+join stage pair — measured +1.2 s on
-    // a funnel-stage (tiny, checkpointed) input and a wash on the
-    // corpus replicated ×20 (0.86 vs 0.87 s), while the window's per-(band,bucket) sort is
-    // bounded by maxBucket at any scale once storms are the only big
-    // buckets. Numbers in OPTIMIZATION_r18.md.
-    val bucketW = Window.partitionBy("band", "bucket")
-    val pruned = banded
-      .withColumn("bsize", count(lit(1)).over(bucketW))
-      .filter(col("bsize") <= maxBucket)
-      .drop("bsize")
+    // self-join.
+    val pruned = dropHotBuckets(banded, maxBucket)
 
     // Salted self-join: a bucket near maxBucket emits O(maxBucket²) pairs,
     // and an unsalted equi-join does that in ONE task (the bucket hashes
@@ -930,20 +927,11 @@ object Dedup {
     val bandArr = array((0 until 4).map { b =>
       shiftright(col("h60"), b * 15).bitwiseAND(lit(0x7FFFL))
     }: _*)
-    // window guard, NOT dropHotBuckets (round-18, measured): the banded
-    // subtree here is unmaterialized and its hash upstream is the
-    // expensive part — the anti-join shape references it twice and
-    // recomputes it, while the window reuses one shuffle. `hashed` is
-    // often a pixel/image-hash subtree (q164 measured 1.1→2.4 s under
-    // the anti-join shape from the doubled upstream compute)
-    val bucketW = Window.partitionBy("band", "bucket")
-    val banded = hashed.select(col("doc_id"), col("h60"),
-                               posexplode(bandArr))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bucket")
-      .withColumn("bsize", count(lit(1)).over(bucketW))
-      .filter(col("bsize") <= maxBucket)
-      .drop("bsize")
+    val banded = dropHotBuckets(
+      hashed.select(col("doc_id"), col("h60"), posexplode(bandArr))
+        .withColumnRenamed("pos", "band")
+        .withColumnRenamed("col", "bucket"),
+      maxBucket)
     val S = 8
     val a = banded.select(col("band"), col("bucket"),
                           col("doc_id").as("doc_a"), col("h60").as("ha"))

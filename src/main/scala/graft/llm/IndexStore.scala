@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
+import graft.sources.Bucketing
+
 /** Persistence for the incremental-dedup and ANN indexes — the piece that
   * closes the daily-ingest contract: an index built from yesterday's corpus
   * must classify today's batch from DISK, in a fresh session, without
@@ -184,6 +186,31 @@ object IndexStore {
     * set, plain otherwise). Writes `__v{N+1}` completely beside the live
     * `__v{N}`, commits with one atomic marker create, then GCs versions
     * ≤ N−1. See the object scaladoc for the crash/concurrency analysis.
+    *
+    * A bucketed write ([[graft.sources.Bucketing.bucketedWriter]]) runs
+    * `p` tasks for `n` buckets, `p` the largest divisor of `n` that is at
+    * most the frame session's `spark.sql.shuffle.partitions`:
+    *
+    *  - `p` divides `n`, so `pmod(murmur3(keys), p)` equals
+    *    `pmod(bucketId, p)` with `bucketId = pmod(murmur3(keys), n)`:
+    *    every bucket's rows land in exactly one task, and the version
+    *    holds one file per non-empty bucket (Spark's bucket-id suffix,
+    *    the same sort, the same spec file) however many buckets a task
+    *    carries. A frame already hash-partitioned by the keys into `p`
+    *    partitions (an aggregate on them) keeps its own shuffle, which
+    *    AQE may coalesce further; coalescing merges whole partitions, so
+    *    this still holds.
+    *  - Each write task pays a fixed cost before it writes a row: it
+    *    deserializes a `WriteJobDescription`, which carries the session's
+    *    whole Hadoop conf. One task per bucket paid it 32 times per
+    *    publish on a 4-core host: 13–43 ms of `executorDeserializeTime`
+    *    per task for 5–18 ms of run time (perfbench curation,
+    *    `plans/probe/index_write_width.txt`). One task per core pays it
+    *    once per core.
+    *  - Shuffle partitions, not `defaultParallelism`, set the bound: it is
+    *    the width every other shuffle of the session plans at, and under
+    *    dynamic allocation `defaultParallelism` can read 2 at planning
+    *    time. On a cluster whose shuffle partitions reach `n`, `p = n`.
     */
   private def publishTable(df: DataFrame, table: String,
                            bucket: Option[(Int, Seq[String])],
@@ -208,19 +235,15 @@ object IndexStore {
     // whose rows are scattered across tasks (anti-join/union outputs)
     // writes up to partitions × numBuckets tiny files — measured 951
     // files instead of 32 on q285's rolled index, doubling every
-    // downstream version walk (round-18; guide §6 small files). Cluster
-    // by the bucket keys first so each task holds exactly its buckets
-    // and the file count equals the bucket count at any scale.
-    val src = bucket.fold(df) { case (n, keys) =>
-      df.repartition(n, keys.map(df.apply): _*)
+    // downstream version walk (round-18; guide §6 small files). The
+    // bucketed writer clusters by the bucket keys first so each task
+    // holds whole buckets and the file count equals the bucket count at
+    // any scale.
+    val w = bucket.fold(df.write) { case (n, keys) =>
+      Bucketing.bucketedWriter(df, n, keys)
     }
-    val w0 = src.write.mode(SaveMode.Overwrite).format("parquet")
-      .option("path", vdir)
-    val w = bucket.fold(w0) { case (n, keys) =>
-      w0.bucketBy(n, keys.head, keys.tail: _*)
-        .sortBy(keys.head, keys.tail: _*)
-    }
-    w.saveAsTable(vt)
+    w.mode(SaveMode.Overwrite).format("parquet").option("path", vdir)
+      .saveAsTable(vt)
     val spec = bucket match {
       case Some((n, keys)) => s"$n\n${keys.mkString(",")}\n${df.schema.toDDL}"
       case None            => s"0\n\n${df.schema.toDDL}"

@@ -1,5 +1,7 @@
 package graft.metrics
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -140,6 +142,16 @@ object BinaryMetrics {
   private val pos = sum(when(col("label") === 1.0d, 1L).otherwise(0L)).as("pos")
   private val neg = sum(when(col("label") === 1.0d, 0L).otherwise(1L)).as("neg")
 
+  /** `byScore`'s rows, one per distinct score, from ONE collect limited to
+    * [[AutoExactMaxScores]] + 1 rows: `None` over the bound. Exact
+    * counting, not an `approx_count_distinct` estimate, and the driver's
+    * share stays ≤ 10K rows at any data scale.
+    */
+  private def bounded(byScore: DataFrame): Option[Seq[Row]] = {
+    val rows = byScore.limit(AutoExactMaxScores.toInt + 1).collect().toSeq
+    if (rows.length > AutoExactMaxScores) None else Some(rows)
+  }
+
   /** E5 — ROC curve points, DataFrame-native (replaces sklearn `roc_curve`
     * over collected arrays, `sst2_test2.py:127-128`).
     *
@@ -159,46 +171,45 @@ object BinaryMetrics {
     * `maxBins = 0` keeps the exact per-distinct-score curve (right for
     * discrete scores / oracle comparison).
     *
-    * `maxBins = -1` (the DEFAULT) resolves automatically: one
-    * `approx_count_distinct(score)` pre-check picks exact mode when the
-    * cardinality is ≤ [[AutoExactMaxScores]] and [[AutoBins]]-bin
-    * quantile binning above it — a naive caller with continuous LR
-    * scores gets a bounded window WITHOUT opting in, and the unbounded
-    * exact mode is an explicit choice, never a scale accident.
-    * [[aucROC]] resolves the same default by exact counting instead: its
-    * bounded grouped collect is the exact curve's input as well.
+    * `maxBins = -1` (the DEFAULT) resolves automatically, from the
+    * bounded grouped collect [[aucROC]] runs ([[bounded]]): at or
+    * under [[AutoExactMaxScores]] distinct scores the collected
+    * (score, pos, neg) rows are the exact curve's input, and the window
+    * plan runs over them in one partition; above it, [[AutoBins]]-bin
+    * quantile binning — a naive caller with continuous LR scores gets a
+    * bounded window WITHOUT opting in, and the unbounded exact mode is an
+    * explicit choice, never a scale accident.
     */
   def rocPoints(preds: Dataset[_], labelCol: String = "label",
                 scoreCol: String = "score", maxBins: Int = -1): DataFrame = {
     val scored = scoredRows(preds, labelCol, scoreCol)
-    val bins =
-      if (maxBins >= 0) maxBins
-      else {
-        val distinct = scored.agg(
-          approx_count_distinct("score")).head().getLong(0)
-        if (distinct <= AutoExactMaxScores) 0 else AutoBins
-      }
+    def binned(bins: Int): DataFrame = {
+      val probs = (1 until bins).map(_.toDouble / bins).toArray
+      val edges = scored.stat
+        .approxQuantile("score", probs, 1.0 / (4.0 * bins))
+        .distinct.sorted.toSeq
+      // bin index = #edges strictly below the score (monotone in score),
+      // so binning preserves score order; threshold of a bin = its max.
+      val bin = size(filter(typedLit(edges), e => e < col("score")))
+      scored.withColumn("bin", bin)
+        .groupBy("bin")
+        .agg(max("score").as("score"), pos, neg)
+        .drop("bin")
+    }
+    val exact = scored.groupBy("score").agg(pos, neg)
     val byScore =
-      if (bins <= 0) scored.groupBy("score").agg(pos, neg)
-      else {
-        val probs = (1 until bins).map(_.toDouble / bins).toArray
-        val edges = scored.stat
-          .approxQuantile("score", probs, 1.0 / (4.0 * bins))
-          .distinct.sorted.toSeq
-        // bin index = #edges strictly below the score (monotone in score),
-        // so binning preserves score order; threshold of a bin = its max.
-        val bin = size(filter(typedLit(edges), e => e < col("score")))
-        scored.withColumn("bin", bin)
-          .groupBy("bin")
-          .agg(max("score").as("score"), pos, neg)
-          .drop("bin")
+      if (maxBins == 0) exact
+      else if (maxBins > 0) binned(maxBins)
+      else bounded(exact).fold(binned(AutoBins)) { rows =>
+        scored.sparkSession.createDataFrame(rows.asJava, exact.schema)
+          .coalesce(1)
       }
     // Windows over the score-aggregated relation (≤ #distinct scores or
     // maxBins rows); single-partition windows are intentional here — the
     // input is already reduced, so this is a driver-scale sort, not a
     // data-scale one. The class totals are an unordered whole-relation
-    // window beside the cumulative one, so building the frame runs no
-    // job; `Long / Long` divides as doubles, as `Long / Double` did.
+    // window beside the cumulative one, not a job of their own;
+    // `Long / Long` divides as doubles, as `Long / Double` did.
     val w = Window.orderBy(desc("score"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     byScore
@@ -245,10 +256,9 @@ object BinaryMetrics {
     * `groupBy(score)` limited to [[AutoExactMaxScores]] + 1 rows. At or
     * under the bound that is the exact per-score count, and the curve is
     * built on the driver ([[exactCurve]]); over it, the AUC comes from the
-    * [[AutoBins]]-bin [[rocPoints]] plan. The bound is exact counting, not
-    * an `approx_count_distinct` estimate, and keeps the driver's share at
-    * ≤ 10K rows at any data scale. `maxBins = 0` collects every distinct
-    * score; `maxBins > 0` integrates the binned [[rocPoints]].
+    * [[AutoBins]]-bin [[rocPoints]] plan ([[bounded]]). `maxBins = 0`
+    * collects every distinct score; `maxBins > 0` integrates the binned
+    * [[rocPoints]].
     */
   def aucROC(preds: Dataset[_], labelCol: String = "label",
              scoreCol: String = "score", maxBins: Int = -1): Double = {
@@ -256,18 +266,12 @@ object BinaryMetrics {
       rocPoints(preds, labelCol, scoreCol, bins)
         .select("fpr", "tpr").collect()
         .map(r => (r.getDouble(0), r.getDouble(1))).toSeq
+    val exact = scoredRows(preds, labelCol, scoreCol)
+      .groupBy("score").agg(pos, neg)
     val pts =
       if (maxBins > 0) binnedCurve(maxBins)
-      else {
-        val byScore = scoredRows(preds, labelCol, scoreCol)
-          .groupBy("score").agg(pos, neg)
-        if (maxBins == 0) exactCurve(byScore.collect().toSeq)
-        else {
-          val rows = byScore.limit(AutoExactMaxScores.toInt + 1).collect()
-          if (rows.length > AutoExactMaxScores) binnedCurve(AutoBins)
-          else exactCurve(rows.toSeq)
-        }
-      }
+      else if (maxBins == 0) exactCurve(exact.collect().toSeq)
+      else bounded(exact).fold(binnedCurve(AutoBins))(exactCurve)
     val curve = ((0.0, 0.0) +: pts).toList
     curve.zip(curve.tail).map { case ((x0, y0), (x1, y1)) =>
       (x1 - x0) * (y1 + y0) / 2.0

@@ -33,7 +33,9 @@ import graft.sources.Tables
 object Probe {
 
   /** One query's best pass: driver build and sink execution seconds,
-    * runtime counts, shuffle bytes written, the generated classes
+    * runtime counts, the tasks' summed `executorDeserializeTime` in
+    * seconds (`deser`, the fixed cost each task pays before it runs),
+    * shuffle bytes written, the generated classes
     * compiled, the Catalyst phase seconds summed over every query the
     * pass executed, and the pass's jobs grouped by call site (site →
     * (jobs, job seconds)); `spread` is the slowest timed pass's total
@@ -41,6 +43,7 @@ object Probe {
     */
   final case class Cost(name: String, build: Double, exec: Double,
                         jobs: Int, stages: Int, tasks: Int,
+                        deser: Double,
                         shuffleBytes: Long, compiles: Long,
                         analysis: Double, optimization: Double,
                         planning: Double,
@@ -50,14 +53,15 @@ object Probe {
 
     /** The layer row, in [[Cost.columns]] order. */
     def row: Seq[String] = Seq(f"$total%.3f", f"$build%.3f", f"$exec%.3f",
-      s"$jobs", s"$stages", s"$tasks", f"${shuffleBytes / 1e6}%.2f",
+      s"$jobs", s"$stages", s"$tasks", f"$deser%.3f",
+      f"${shuffleBytes / 1e6}%.2f",
       s"$compiles", f"$analysis%.3f", f"$optimization%.3f",
       f"$planning%.3f")
   }
 
   object Cost {
     val columns: Seq[String] = Seq("t_total", "t_build", "t_exec", "jobs",
-      "stages", "tasks", "shuffleMB", "compiles", "t_analysis",
+      "stages", "tasks", "t_deser", "shuffleMB", "compiles", "t_analysis",
       "t_optimization", "t_planning")
   }
 
@@ -91,22 +95,23 @@ object Probe {
     stack.linesIterator.map(_.trim).find(f =>
       f.startsWith("graft.") && !wrappers.exists(f.startsWith))
 
-  /** Counts jobs, stages, tasks and shuffle writes, and attributes each
-    * job to the [[graftSite]] of its result stage. A job launched off the
-    * calling thread (a broadcast, say) carries no user frame; it takes
-    * the site of the SQL execution it belongs to.
+  /** Counts jobs, stages, tasks, task deserialize time and shuffle
+    * writes, and attributes each job to the [[graftSite]] of its result
+    * stage. A job launched off the calling thread (a broadcast, say)
+    * carries no user frame; it takes the site of the SQL execution it
+    * belongs to.
     */
   private final class Counters extends SparkListener
       with QueryExecutionListener {
     var jobs, stages, tasks = 0
-    var shuffleBytes = 0L
+    var deserMs, shuffleBytes = 0L
     var optimization, planning, analysis = 0.0
     val sites = mutable.LinkedHashMap.empty[String, (Int, Double)]
     private val execSites = mutable.Map.empty[Long, String]
     private val jobs0 = mutable.Map.empty[Int, (String, Long)]
 
     def reset(): Unit = synchronized {
-      jobs = 0; stages = 0; tasks = 0; shuffleBytes = 0L
+      jobs = 0; stages = 0; tasks = 0; deserMs = 0L; shuffleBytes = 0L
       optimization = 0.0; planning = 0.0; analysis = 0.0
       sites.clear(); execSites.clear(); jobs0.clear()
     }
@@ -141,8 +146,10 @@ object Probe {
 
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
       tasks += 1
-      Option(e.taskMetrics)
-        .foreach(m => shuffleBytes += m.shuffleWriteMetrics.bytesWritten)
+      Option(e.taskMetrics).foreach { m =>
+        deserMs += m.executorDeserializeTime
+        shuffleBytes += m.shuffleWriteMetrics.bytesWritten
+      }
     }
 
     def addPhases(qe: QueryExecution): Unit = synchronized {
@@ -187,8 +194,8 @@ object Probe {
       c.addPhases(df.queryExecution)
       c.synchronized {
         Cost(name, (t1 - t0) / 1e9, (t2 - t1) / 1e9, c.jobs, c.stages,
-             c.tasks, c.shuffleBytes, compiled, c.analysis,
-             c.optimization, c.planning, c.sites.toSeq)
+             c.tasks, c.deserMs / 1e3, c.shuffleBytes, compiled,
+             c.analysis, c.optimization, c.planning, c.sites.toSeq)
       }
     }
     try {

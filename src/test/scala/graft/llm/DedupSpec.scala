@@ -473,6 +473,33 @@ class DedupSpec extends SparkSpec {
     (b, s)
   }
 
+  test("minhashIndexPortable's maxBucket guard drops exactly the planted " +
+       "hot bucket's rows") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val distinct = (0L until 40L).map { i =>
+      (i, Seq.fill(30)(s"w${rnd.nextInt(100000)}").mkString(" "))
+    }
+    val boiler = "identical boilerplate text planted six times with " +
+      "plenty of shingle overlap between every copy"
+    val corpus = (distinct ++ (200L until 206L).map(i => (i, boiler)))
+      .toDF("doc_id", "text")
+    def bucketRows(maxBucket: Int) =
+      Dedup.minhashIndexPortable(corpus, "doc_id", "text",
+                                 maxBucket = maxBucket).buckets
+        .select("corpus_id", "band", "bucket").as[(Long, Int, Long)]
+        .collect().toSet
+    val all = bucketRows(Int.MaxValue)
+    // the six copies share one bucket per band; the random docs share
+    // none
+    val hot = all.groupBy(r => (r._2, r._3)).filter(_._2.size > 4).keySet
+    val boilerBuckets = all.filter(_._1 == 200L).map(r => (r._2, r._3))
+    assert(hot == boilerBuckets)
+    val guarded = bucketRows(4)
+    assert(all -- guarded == all.filter(r => hot((r._2, r._3))))
+    assert((all -- guarded).map(_._1) == (200L until 206L).toSet)
+  }
+
   test("mergeMinhashIndex: an append-only roll equals a from-scratch " +
        "rebuild (buckets incl. the re-applied maxBucket guard, and " +
        "shingles); re-rolling the same delta is a no-op") {

@@ -1,8 +1,14 @@
 package graft.llm
 
+import scala.collection.mutable
+
 import graft.{Sessions, SparkSpec}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ListenerBridge
 
 /** The daily-ingest contract: an index built yesterday must classify
   * today's batch FROM DISK — save → load → classify byte-identical to the
@@ -450,5 +456,50 @@ class IndexStoreSpec extends SparkSpec {
     assert(depth("1") == 2,
            "floor of 2 preserves the crash-safety invariant")
     assert(depth("junk") == 2)
+  }
+
+  test("a 32-bucket publish writes from one task per core: one file per " +
+       "non-empty bucket, 4 write tasks at 4 shuffle partitions, and the " +
+       "table reads back row-identical") {
+    val writeStageTasks = mutable.Buffer.empty[Int]
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val m = e.stageInfo.taskMetrics
+        if (m != null && m.outputMetrics.bytesWritten > 0)
+          writeStageTasks.synchronized {
+            writeStageTasks += e.stageInfo.numTasks
+          }
+      }
+    }
+    val sc = spark.sparkContext
+    try Sessions.withConf(spark, "spark.sql.shuffle.partitions" -> "4") {
+      spark =>
+      // (fp, corpus_id) rows in 8 range partitions, each holding rows of
+      // every bucket
+      val index = spark.range(0, 400, 1, 8).select(
+        md5(concat(lit("corpus document number "), col("id"))).as("fp"),
+        (col("id") + 100L).as("corpus_id"))
+      assert(index.rdd.getNumPartitions == 8)
+      val buckets = index.select(pmod(hash(col("fp")), lit(32)))
+        .distinct().collect().map(_.getInt(0)).sorted.toSeq
+      ListenerBridge.waitUntilEmpty(sc)
+      sc.addSparkListener(listener)
+      try {
+        IndexStore.saveFingerprintIndex(index, "idx_width_fp",
+                                        numBuckets = 32)
+        ListenerBridge.waitUntilEmpty(sc)
+      } finally sc.removeSparkListener(listener)
+      assert(writeStageTasks.toSeq == Seq(4),
+             s"write stages' task counts: $writeStageTasks")
+
+      val loaded = IndexStore.loadFingerprintIndex(spark, "idx_width_fp")
+      val fileBuckets = loaded.inputFiles.toSeq
+        .map(f => BucketingUtils.getBucketId(new Path(f).getName).get)
+      assert(fileBuckets.sorted == buckets,
+             s"one file per non-empty bucket: $fileBuckets vs $buckets")
+      def rows(df: DataFrame) = df.select("fp", "corpus_id").collect()
+        .map(_.toSeq).sortBy(_.toString).toSeq
+      assert(rows(loaded) == rows(index))
+    } finally IndexStore.drop(spark, "idx_width_fp")
   }
 }
